@@ -857,25 +857,6 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dss_plugin_google_cloud_vision_spark.operators.textstats import (
-        regex_token_count,
-        token_count,
-    )
-
-    return _table(spark, sf_dir, "documents").select(
-        "doc_id",
-        token_count().cast("bigint").alias("n_tokens"),
-        regex_token_count().cast("bigint").alias("n_regex_tokens"),
-    )
-
-
-def q_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dss_plugin_google_cloud_vision_spark.operators.textstats import quality_table
-
-    return quality_table(_table(spark, sf_dir, "documents"))
-
-
 def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dss_plugin_google_cloud_vision_spark.operators.textstats import (
         fingerprint_column,
@@ -996,12 +977,6 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dss_plugin_google_cloud_vision_spark.operators.sessions import session_stats
 
     return session_stats(_table(spark, sf_dir, "events"))
-
-
-def q_langid_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dss_plugin_google_cloud_vision_spark.operators.textstats import langid_table
-
-    return langid_table(_table(spark, sf_dir, "documents"))
 
 
 def q_partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

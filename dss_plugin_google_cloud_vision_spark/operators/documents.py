@@ -16,53 +16,46 @@ The fused stage in ``operators.pages`` is the scale path (no explode
 round-trip of page payloads); this module exists because the exploded form
 is the reference's observable operator inventory (E1/E2/E3) and because the
 merge is needed as a standalone operator for document-level reassembly.
-Both paths produce identical results (tested).
+It is not a second implementation: splitting and per-page routing call the
+fused stage's router (``pages.split_payload`` / ``pages.route_payload``),
+so both forms produce identical results (tested).
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..errors import DocumentSplitError, ErrorHandling, ExtractionError
-from ..functions.html_extract import extract_html
-from ..functions.pdf_extract import extract_pdf_page, is_pdf_payload, split_pdf_pages
+from ..errors import DocumentSplitError, ErrorHandling
 from ..functions.response import build_page_response
-from ..functions.tiff_extract import extract_tiff_frame, is_tiff_payload, split_tiff_frames
 from ..naming import generate_unique
 from .extract import extract
+from .pages import CAPTURED_EXCEPTIONS, route_payload, split_payload
 
 PAGE_PAYLOAD_COLUMN = "page_payload"
 PAGE_NUMBER_COLUMN = "page_number"
 
 
-def _split_one_payload(payload) -> Optional[List[bytes]]:
-    data = bytes(payload) if payload is not None else b""
-    if is_pdf_payload(data):
-        try:
-            return split_pdf_pages(data)
-        except (DocumentSplitError, ExtractionError):
-            return None
-    if is_tiff_payload(data):
-        try:
-            return split_tiff_frames(data)
-        except (DocumentSplitError, ExtractionError):
-            return None
-    return [data]
+def _split_one_payload(payload) -> Optional[List[Tuple[Optional[int], bytes]]]:
+    try:
+        _, pages = split_payload(payload)
+    except CAPTURED_EXCEPTIONS:
+        return None
+    return pages
 
 
 def _split_payload_udf():
-    """Document payload → per-page payloads (vectorized pandas UDF). Null
-    marks a failed split (the reference's empty ``splitted_document_path``
-    sentinel, document_utils.py:152-156); HTML payloads are a single page.
-    Built lazily: ``pandas_udf`` needs an active session to parse the
-    return-type DDL."""
+    """Document payload → (page_number, page_payload) pairs (vectorized
+    pandas UDF). Null marks a failed split (the reference's empty
+    ``splitted_document_path`` sentinel, document_utils.py:152-156); HTML
+    payloads are a single page numbered null. Built lazily: ``pandas_udf``
+    needs an active session to parse the return-type DDL."""
 
-    @pandas_udf("array<binary>")
+    @pandas_udf("array<struct<page_number:int,payload:binary>>")
     def split_udf(payloads: pd.Series) -> pd.Series:
         return payloads.map(_split_one_payload)
 
@@ -71,22 +64,19 @@ def _split_payload_udf():
 
 def split_documents(df: DataFrame, html_column: str = "html") -> DataFrame:
     """Explode documents into page rows (reference E1/E2):
-    adds ``page_number`` (1-based ordinal for multi-page payloads, null for
-    single-page HTML — the reference's int-or-"" mixed column normalized to
-    nullable int) and ``page_payload``; a failed split yields one row with
-    null ``page_payload``."""
+    adds ``page_payload`` and ``page_number`` (1-based ordinal for
+    multi-page payloads, null for single-page HTML — the reference's
+    int-or-"" mixed column normalized to nullable int); a failed split
+    yields one row with null ``page_payload`` and ``page_number``."""
     page_number_col = generate_unique(PAGE_NUMBER_COLUMN, df.columns, "")
     payload_col = generate_unique(PAGE_PAYLOAD_COLUMN, df.columns, "")
-    is_multipage: Column = (
-        F.substring(F.col(html_column).cast("binary"), 1, 5) == F.lit(b"%PDF-")
-    ) | (F.substring(F.col(html_column).cast("binary"), 1, 4) == F.lit(b"II*\x00"))
-    exploded = df.select(
-        "*", F.posexplode_outer(_split_payload_udf()(F.col(html_column))).alias("_page_idx", payload_col)
+    page = F.col("_page")
+    exploded = df.select("*", F.explode_outer(_split_payload_udf()(F.col(html_column))).alias("_page"))
+    return (
+        exploded.withColumn(payload_col, page["payload"])
+        .withColumn(page_number_col, page["page_number"])
+        .drop("_page")
     )
-    return exploded.withColumn(
-        page_number_col,
-        F.when(is_multipage & F.col(payload_col).isNotNull(), F.col("_page_idx") + 1).cast("int"),
-    ).drop("_page_idx")
 
 
 def _extract_one_page(row: dict, payload_column: str = PAGE_PAYLOAD_COLUMN) -> str:
@@ -98,18 +88,9 @@ def _extract_one_page(row: dict, payload_column: str = PAGE_PAYLOAD_COLUMN) -> s
     if payload is None:
         raise DocumentSplitError("Document could not be split")
     data = bytes(payload)
-    if is_pdf_payload(data):
-        page = extract_pdf_page(data)
-        return build_page_response(page.text, page.spans, page.language_code, page.language_confidence)
-    if is_tiff_payload(data):
-        frame = extract_tiff_frame(data)
-        return build_page_response(
-            frame.text, frame.spans, frame.language_code, frame.language_confidence
-        )
-    extraction = extract_html(data)
-    return build_page_response(
-        extraction.text, extraction.spans, extraction.language_code, extraction.language_confidence
-    )
+    _, extract_page = route_payload(data)
+    page = extract_page(data)
+    return build_page_response(page.text, page.spans, page.language_code, page.language_confidence)
 
 
 def extract_split_pages(
@@ -124,7 +105,7 @@ def extract_split_pages(
     return extract(
         df,
         _extract_one_page,
-        (DocumentSplitError, ExtractionError),
+        CAPTURED_EXCEPTIONS,
         column_prefix,
         error_handling=error_handling,
         verbose=verbose,

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import logging
+import reprlib
 from typing import Callable, Dict, Iterable, Iterator, List, NamedTuple, Optional, Sequence, Tuple, Union
 
 import pyarrow as pa
@@ -84,7 +85,10 @@ def guarded_row_map(
     try:
         output[column_names.response] = _as_string(function(row=row, **function_kwargs))
     except exceptions as error:
-        logging.warning(f"Function {function.__name__} failed on: {row} because of error: {error}")
+        # reprlib bounds the line: rows may carry whole documents
+        logging.warning(
+            f"Function {function.__name__} failed on: {reprlib.repr(row)} because of error: {error}"
+        )
         output[column_names.error_message] = str(error)
         output[column_names.error_type] = qualified_error_type(error)
         output[column_names.error_raw] = str(error.args)
@@ -142,7 +146,9 @@ def guarded_batch_map(
         response = function(batch=batch, **function_kwargs)
         return batch_response_parser(batch=batch, response=response, column_names=column_names)
     except exceptions as error:
-        logging.warning(f"Batch function {function.__name__} failed on: {batch} because of error: {error}")
+        logging.warning(
+            f"Batch function {function.__name__} failed on: {reprlib.repr(batch)} because of error: {error}"
+        )
         error_type = qualified_error_type(error)
         output_batch = []
         for _ in batch:

@@ -37,6 +37,25 @@ def test_split_documents_explode(spark):
         else:
             assert len(rows) == 1 and rows[0]["page_number"] is None
     pages.unpersist()
+    # split_documents keeps the input columns first, then page_payload, page_number
+    assert pages.columns == df.columns + ["page_payload", "page_number"]
+
+    # TIFF payloads split through the same router: two frames per document
+    from dss_plugin_google_cloud_vision_spark.sources.render import documents_as_tiff_pages
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"tok{i}w{j}" for j in range(12)), "en") for i in range(4)],
+        "doc_id long, text string, lang string",
+    )
+    tiff = documents_as_tiff_pages(docs)
+    tiff_pages = split_documents(tiff)
+    assert tiff_pages.columns == tiff.columns + ["page_payload", "page_number"]
+    by_url = {}
+    for row in tiff_pages.collect():
+        assert row["page_payload"] is not None
+        by_url.setdefault(row["url"], []).append(row["page_number"])
+    assert len(by_url) == 4
+    assert all(sorted(numbers) == [1, 2] for numbers in by_url.values())
 
 
 def test_exploded_path_matches_fused_path(spark):

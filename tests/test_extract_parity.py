@@ -24,8 +24,11 @@ from dss_plugin_google_cloud_vision_spark.naming import (
     generate_unique,
 )
 from dss_plugin_google_cloud_vision_spark.operators.extract import (
+    aligned_batch_response_parser,
     extract,
     extraction_metrics,
+    guarded_batch_map,
+    guarded_row_map,
 )
 
 API_EXCEPTIONS = (ExternalAPIError, ValueError)
@@ -331,3 +334,32 @@ def test_verbose_error_raw_byte_parity_batch_exception(spark):
             row["test_api_error_type"]
             == "dss_plugin_google_cloud_vision_spark.errors.ExternalAPIError"
         )
+
+
+def test_failure_log_line_is_bounded(caplog):
+    """A failing row's warning names the function and the error but not
+    the whole row: a 100 KB text cell must not reach the log. The error
+    columns keep the full, untruncated values."""
+    column_names = build_unique_column_names([INPUT_COLUMN, "text"], COLUMN_PREFIX)
+    row = {INPUT_COLUMN: "API_FAILURE", "text": "x" * 100_000}
+    with caplog.at_level("WARNING"):
+        out = guarded_row_map(call_mock_api, column_names, row, API_EXCEPTIONS, verbose=True)
+    [record] = caplog.records
+    message = record.getMessage()
+    assert len(message) < 1024
+    assert "call_mock_api" in message and "foo" in message
+    assert out[column_names.error_message] == "foo"
+    assert out[column_names.error_raw] == "('foo',)"
+
+    caplog.clear()
+    with caplog.at_level("WARNING"):
+        guarded_batch_map(
+            call_mock_api_batch,
+            column_names,
+            [row] * 20,
+            aligned_batch_response_parser,
+            API_EXCEPTIONS,
+        )
+    [record] = caplog.records
+    assert len(record.getMessage()) < 1024
+    assert "call_mock_api_batch" in record.getMessage()

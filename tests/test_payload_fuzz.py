@@ -17,7 +17,8 @@ both the kernel functions and the full ``mapInArrow`` stage:
    ``extract_pages`` — every document yields rows, error rows carry the
    module-qualified reference taxonomy, and the stage never aborts;
 3. error-row goldens — canonical corruptions produce exact
-   (error_type, error_message) pairs, pinning the taxonomy text.
+   (error_type, error_message) pairs, pinning the taxonomy text, on the
+   JSON path (incl. verbose ``error_raw``) and the typed path alike.
 """
 
 from __future__ import annotations
@@ -45,6 +46,7 @@ from dss_plugin_google_cloud_vision_spark.operators.pages import (
     extract_document,
     extract_document_typed,
     extract_pages,
+    extract_pages_typed,
 )
 
 CAPTURED = (ExtractionError, DocumentSplitError)
@@ -224,7 +226,7 @@ GOLDEN_ERRORS = [
 def test_error_row_goldens(spark, payload, want_type, want_prefix):
     """Canonical corruptions pin the exact taxonomy strings the error
     columns carry (reference parallelizer.py:72-75 module-qualified
-    naming)."""
+    naming), on both outputs of the shared extraction stage."""
     df = spark.createDataFrame([(0, payload)], "doc_id bigint, html binary")
     [row] = extract_pages(df, error_handling=ErrorHandling.LOG).collect()
     assert row["content_api_error_type"] == want_type
@@ -233,3 +235,21 @@ def test_error_row_goldens(spark, payload, want_type, want_prefix):
     # FAIL mode surfaces the same failure as a task abort (fail-fast)
     with pytest.raises(Exception):
         extract_pages(df, error_handling=ErrorHandling.FAIL).collect()
+
+    # verbose: error_raw is the kernel exception's str(error.args)
+    with pytest.raises(CAPTURED) as raised:
+        extract_document_typed(payload)
+    [verbose_row] = extract_pages(df, verbose=True).collect()
+    assert verbose_row["content_api_error_raw"] == str(raised.value.args)
+    assert verbose_row["content_api_error_message"] == row["content_api_error_message"]
+    if payload == b"":
+        assert verbose_row["content_api_error_raw"] == "('empty document payload',)"
+
+    # typed path: same taxonomy, null extraction, same fail-fast
+    [typed_row] = extract_pages_typed(df, error_handling=ErrorHandling.LOG).collect()
+    assert typed_row["error_type"] == want_type
+    assert typed_row["error_message"] == row["content_api_error_message"]
+    assert typed_row["extracted_text"] is None
+    assert typed_row["page_number"] is None and typed_row["spans"] is None
+    with pytest.raises(Exception):
+        extract_pages_typed(df, error_handling=ErrorHandling.FAIL).collect()
