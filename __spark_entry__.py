@@ -681,10 +681,10 @@ def q_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer training prep: learn the corpus's first 6 BPE merges.
-    One corpus pass collapses text to distinct-word grain; each merge
-    round is an integer pair count + map-combined top-pair election +
-    one replace() over the bounded vocabulary table (replace is
-    left-to-right non-overlapping in both engines == greedy BPE)."""
+    One corpus pass collapses text to distinct-word grain, collected once;
+    each merge round is an integer pair count + top-pair election + one
+    replace over the bounded vocabulary on the driver (replace is
+    left-to-right non-overlapping in every engine == greedy BPE)."""
     from dss_plugin_google_cloud_vision_spark.operators.tokenizer import (
         learn_bpe_merges,
     )
@@ -1796,8 +1796,9 @@ def q_classifier_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer lifecycle second half: apply the corpus-learned merge
     list back onto the corpus (encode). Runs at distinct-word grain (the
-    bounded vocabulary), per-round broadcast of the single merge row, then
-    one Zipf-documented word join + map-combined per-doc rollup. Output:
+    bounded vocabulary), every collected merge a literal replace in one
+    projection, then one Zipf-documented word join + map-combined per-doc
+    rollup. Output:
     per-doc word/BPE-token/char counts + integer compression ratio."""
     from dss_plugin_google_cloud_vision_spark.operators.tokenizer import (
         apply_bpe_merges,

@@ -1046,9 +1046,10 @@ def semantic_dedup(
 
     Returns one row per input row: (id, cluster, is_semantic_dup).
 
-    Scale shape: training is ``similarity.train_centroids`` (narrow
-    Arrow assignment + k-row partial-agg collects — the broadcast-build
-    pattern); marking is ONE equi-join shuffle keyed on the cluster id.
+    Scale shape: training is ``similarity.train_centroids`` (one seed
+    collect, then per Lloyd step a narrow Arrow assignment + one
+    partial-agg collect — the broadcast-build pattern); marking is ONE
+    equi-join shuffle keyed on the cluster id.
     Per-cluster pair work is (n/k)²·k = n²/k, so k scales WITH the
     corpus (SemDeDup trains k ≈ 0.1·√n clusters at 100-TB scale; pass
     pre-trained ``centroids`` to skip training, exactly how a production

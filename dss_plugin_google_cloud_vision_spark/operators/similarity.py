@@ -25,7 +25,7 @@ identically across engines.
 from __future__ import annotations
 
 import hashlib
-from typing import List, Sequence
+from typing import List, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -105,7 +105,8 @@ def cluster_max_lower_dots(
 ) -> DataFrame:
     """Per cluster member, the MAX dot product against any LOWER-id
     member of the same cluster: (id, _max_dot), one row per member that
-    has at least one lower-id partner.
+    has at least one lower-id partner. Ids must be unique within a
+    cluster (a repeat raises ``ValueError`` in the task).
 
     Why it exists (r6): ``semantic_dedup``'s dup rule only asks whether
     SOME lower-id cluster-mate clears the cosine radius. The join form
@@ -135,11 +136,17 @@ def cluster_max_lower_dots(
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         m = len(pdf)
         if m < 2:
-            return pd.DataFrame(
-                {id_col: pd.Series([], dtype="int64"), "_max_dot": pd.Series([], dtype="float64")}
-            )
+            # the id column's own dtype (string ids arrive as object)
+            return pd.DataFrame({id_col: pdf[id_col].iloc[:0], "_max_dot": np.zeros(0)})
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
+        repeated = ids[1:][ids[1:] == ids[:-1]]
+        if len(repeated):
+            # a repeated id would silently pair with itself as its own
+            # "lower" partner
+            raise ValueError(
+                f"{id_col} {repeated.tolist()[0]!r} repeats within one {cluster_col} group"
+            )
         mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
         dim = mat.shape[1]
         out_ids, out_max = [], []
@@ -358,17 +365,6 @@ def hyperplane_band_keys_udf(dim: int, n_planes: int = 32, n_bands: int = 4):
     return pandas_udf(band_keys, "array<int>")
 
 
-def sample_centroids(
-    df: DataFrame, n_centroids: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> List[List[float]]:
-    """Deterministic coarse-quantizer codebook: the ``n_centroids``
-    lowest-id vectors (a stand-in for offline k-means training — real IVF
-    codebooks are trained out-of-band and shipped to the job exactly like
-    this, as a small literal table)."""
-    rows = df.orderBy(id_col).limit(n_centroids).select(vec_col).collect()
-    return [[float(v) for v in row[0]] for row in rows]
-
-
 def ivf_cell_udf(centroids: List[List[float]], metric: str = "dot"):
     """Coarse-quantizer cell assignment as a VECTORIZED Arrow stage:
     argmax dot(vec, centroid) with ties to the lower cell id.
@@ -449,6 +445,92 @@ def assign_cells(
 QUANT_MICRO = 1_000_000
 
 
+def _train_codebooks(
+    df: DataFrame,
+    spaces: Sequence[Tuple[int, int, int, int, str]],
+    id_col: str,
+    vec_col: str,
+) -> List[List[List[float]]]:
+    """Deterministic distributed k-means for several SPACES at once —
+    Lloyd iterations with a FIXED iteration count, seeded by the
+    lowest-id vectors. A space is ``(part, n_parts, n_cells,
+    n_iterations, metric)``: slice ``part`` of the vector cut into
+    ``n_parts`` equal contiguous slices (``(0, 1, ...)`` is the whole
+    vector, the IVF quantizer; PQ subspace ``j`` is ``(j, n_subspaces,
+    ...)``). Returns one codebook per space, ``[]`` each on an empty
+    corpus.
+
+    Cross-engine determinism: per-cell component sums are computed over
+    MICRO-QUANTIZED integers (``round(x * 1e6)`` as bigint) — integer sums
+    are order-independent, so Spark's partial aggregation and DuckDB's
+    streaming aggregate produce the identical mean
+    ``(sum / count) / 1e6`` bit-for-bit; assignments use the same
+    left-fold dot (or its L2 form) + lowest-cell tie-break as
+    ``ivf_cell_udf``. Cells that lose all members keep their previous
+    centroid.
+
+    Scale shape: ONE lowest-id collect seeds every space and gives the
+    dimension. Each Lloyd iteration is ONE aggregation for every space
+    still iterating: one narrow Arrow stage computes every space's cell
+    column, each vector explodes to one (space, cell, d, x_d) row per
+    dimension of every space, and one map-combined groupBy(space, cell,
+    d) sums the quantized components — a cells×dims-row driver collect
+    (the broadcast-build pattern: the codebooks ship to the next
+    iteration inside the next UDFs' closures, exactly how a trained IVF
+    codebook ships to an ingest job)."""
+    n_seed = max(space[2] for space in spaces)
+    rows = df.orderBy(id_col).limit(n_seed).select(vec_col).collect()
+    if not rows:
+        return [[] for _ in spaces]
+    seeds = [[float(v) for v in row[0]] for row in rows]
+    dim = len(seeds[0])
+    slices, books = [], []
+    for part, n_parts, n_cells, _, _ in spaces:
+        if dim % n_parts:
+            raise ValueError(f"dim {dim} not divisible by n_subspaces {n_parts}")
+        width = dim // n_parts
+        slices.append((part * width + 1, width))  # 1-based, as F.slice
+        books.append([seed[part * width : (part + 1) * width] for seed in seeds[:n_cells]])
+    vec = F.col(vec_col)
+    for step in range(max(space[3] for space in spaces)):
+        live = [s for s, space in enumerate(spaces) if step < space[3] and books[s]]
+        if not live:
+            break
+        cells = df.select(
+            vec,
+            *[
+                ivf_cell_udf(books[s], spaces[s][4])(F.slice(vec, *slices[s])).alias(f"_c{s}")
+                for s in live
+            ],
+        )
+        by_space = F.array(
+            *[
+                F.struct(
+                    F.lit(s).alias("space"),
+                    F.col(f"_c{s}").alias("cell"),
+                    F.slice(vec, *slices[s]).alias("x"),
+                )
+                for s in live
+            ]
+        )
+        sums = (
+            cells.select(F.inline(by_space))
+            .select("space", "cell", F.posexplode("x"))
+            .groupBy("space", "cell", "pos")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.round(F.col("col").cast("double") * QUANT_MICRO).cast("bigint")).alias("q"),
+            )
+        )
+        trained = {}
+        for r in sums.collect():
+            mean = trained.setdefault((r["space"], r["cell"]), [0.0] * slices[r["space"]][1])
+            mean[r["pos"]] = (float(r["q"]) / r["n"]) / QUANT_MICRO
+        for s in live:
+            books[s] = [trained.get((s, cid), c) for cid, c in enumerate(books[s])]
+    return books
+
+
 def train_centroids(
     df: DataFrame,
     n_centroids: int = 16,
@@ -457,55 +539,14 @@ def train_centroids(
     vec_col: str = "embedding",
     metric: str = "dot",
 ) -> List[List[float]]:
-    """Deterministic distributed k-means codebook training, expressed as
-    Spark aggregations (Lloyd iterations with a FIXED iteration count and
-    the lowest-id seeding rule of ``sample_centroids``).
-
-    Cross-engine determinism: per-cell component sums are computed over
-    MICRO-QUANTIZED integers (``round(x * 1e6)`` as bigint) — integer sums
-    are order-independent, so Spark's partial aggregation and DuckDB's
-    streaming aggregate produce the identical mean
-    ``(sum / count) / 1e6`` bit-for-bit; assignments use the same
-    left-fold dot + lowest-cell tie-break as ``ivf_cell_udf``. Cells
-    that lose all members keep their previous centroid.
-
-    Scale shape: each iteration is one narrow Arrow assignment stage +
-    one groupBy on the cell id (k cells, map-side partial sums) + a
-    k-row driver collect (the broadcast-build pattern — the codebook
-    ships to the next iteration inside the next UDF's closure, exactly
-    how a trained IVF codebook ships to an ingest job). The quantize /
-    sum plan text is centroid-independent, so JVM codegen compiles once
-    for ALL iterations."""
-    centroids = sample_centroids(df, n_centroids, id_col, vec_col)
-    if not centroids:
-        return centroids
-    dim = len(centroids[0])
-    # quantize expressions as ONE parsed SQL string each — 64 python-side
-    # Column chains cost seconds of py4j round-trips per iteration (same
-    # note as dedup.simhash_table)
-    quant_exprs = [
-        f"CAST(round(CAST(element_at({vec_col}, {d + 1}) AS DOUBLE) * {QUANT_MICRO}) AS BIGINT)"
-        f" AS q{d}"
-        for d in range(dim)
-    ]
-    for _ in range(n_iterations):
-        sums = (
-            assign_cells(df.select(vec_col), centroids, vec_col, metric=metric)
-            .selectExpr("cell", *quant_exprs)
-            .groupBy("cell")
-            .agg(F.count("*").alias("n"), *[F.sum(f"q{d}").alias(f"s{d}") for d in range(dim)])
-        )
-        by_cell = {row["cell"]: row for row in sums.collect()}
-        centroids = [
-            [
-                (float(by_cell[cid][f"s{d}"]) / by_cell[cid]["n"]) / QUANT_MICRO
-                for d in range(dim)
-            ]
-            if cid in by_cell
-            else centroids[cid]
-            for cid in range(len(centroids))
-        ]
-    return centroids
+    """k-means codebook over the whole vector (``_train_codebooks``):
+    ``n_iterations`` Lloyd steps from the ``n_centroids`` lowest-id
+    vectors — 0 returns that sample, the codebook a real IVF job would
+    ship as a small literal table. One seed collect plus one aggregation
+    per iteration; ``[]`` for an empty corpus."""
+    return _train_codebooks(
+        df, [(0, 1, n_centroids, n_iterations, metric)], id_col, vec_col
+    )[0]
 
 
 def _fold_dot(a: Sequence[float], b: Sequence[float]) -> float:
@@ -651,6 +692,16 @@ def search_ivf_index(
 # ---------------------------------------------------------------------------
 
 
+def _train_with_pq(df, ivf, n_subspaces, n_codes, train_iterations, id_col, vec_col):
+    """``_train_codebooks`` over the ``ivf`` spaces followed by one L2
+    space per PQ subspace; an empty corpus has no PQ codebook."""
+    pq = [(j, n_subspaces, n_codes, train_iterations, "l2") for j in range(n_subspaces)]
+    books = _train_codebooks(df, ivf + pq, id_col, vec_col)
+    if not books[-1]:
+        raise ValueError("cannot train PQ codebooks on an empty corpus")
+    return books
+
+
 def train_pq_codebooks(
     df: DataFrame,
     n_subspaces: int = 4,
@@ -661,9 +712,11 @@ def train_pq_codebooks(
 ) -> List[List[List[float]]]:
     """Train a product-quantization codebook (Jégou et al. 2011): the
     vector is split into ``n_subspaces`` contiguous sub-vectors and each
-    subspace gets its own ``n_codes``-entry L2 k-means codebook —
-    ``train_centroids`` with ``metric='l2'`` (PQ quantizes by Euclidean
-    proximity, not dot product) run per subspace over sliced columns.
+    subspace gets its own ``n_codes``-entry L2 k-means codebook (PQ
+    quantizes by Euclidean proximity, not dot product). Every subspace
+    trains in the SAME jobs (``_train_codebooks``): one seed collect,
+    then one aggregation per Lloyd iteration grouped by (subspace, cell,
+    d), so the job count does not grow with ``n_subspaces``.
     Deterministic end-to-end (lowest-id seeding, fixed iterations,
     micro-quantized integer sums). Returns codebooks[j][c] = centroid.
 
@@ -671,31 +724,7 @@ def train_pq_codebooks(
     PQ with 8 subspaces × 256 codes stores 8 BYTES/vector — the
     difference between an index that fits executor memory and one that
     does not."""
-    first = df.select(vec_col).first()
-    if first is None or first[0] is None:
-        raise ValueError("cannot train PQ codebooks on an empty corpus")
-    dim = len(first[0])
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    sub = dim // n_subspaces
-
-    # the per-subspace trainings are independent job chains — overlap
-    # them from a small thread pool (guide §2.6) so one subspace's
-    # collect latency back-fills the other's tasks; results are
-    # per-subspace deterministic, so order is preserved by index
-    def train_one(j: int):
-        sliced = df.select(
-            F.col(id_col), F.slice(F.col(vec_col), j * sub + 1, sub).alias(vec_col)
-        )
-        return train_centroids(
-            sliced, n_codes, train_iterations, id_col, vec_col, metric="l2"
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, n_subspaces)) as pool:
-        codebooks = list(pool.map(train_one, range(n_subspaces)))
-    return codebooks
+    return _train_with_pq(df, [], n_subspaces, n_codes, train_iterations, id_col, vec_col)
 
 
 def encode_pq(
@@ -859,19 +888,18 @@ def build_ivfpq_index(
 
     Returns ``(centroids, codebooks)`` — the two codebook artifacts a
     search job ships exactly like any trained-model side input."""
-    # IVF and PQ codebooks are trained from the same raw vectors with no
-    # cross-dependency — overlap the two job chains (guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        ivf_future = pool.submit(
-            train_centroids, df, n_centroids, ivf_train_iterations, id_col, vec_col
-        )
-        pq_future = pool.submit(
-            train_pq_codebooks, df, n_subspaces, n_codes, pq_train_iterations, id_col, vec_col
-        )
-        centroids = ivf_future.result()
-        codebooks = pq_future.result()
+    # IVF and PQ codebooks come from the same raw vectors with no
+    # cross-dependency: one trainer call runs the IVF space and every PQ
+    # subspace in the same seed collect and Lloyd-step jobs
+    centroids, *codebooks = _train_with_pq(
+        df,
+        [(0, 1, n_centroids, ivf_train_iterations, "dot")],
+        n_subspaces,
+        n_codes,
+        pq_train_iterations,
+        id_col,
+        vec_col,
+    )
     encoded = encode_pq(
         assign_cells(df, centroids, vec_col), codebooks, vec_col, code_col
     )

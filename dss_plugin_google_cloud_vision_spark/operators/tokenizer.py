@@ -11,19 +11,21 @@ Two design choices make this exact across engines and scalable:
 
 1. **The corpus is touched exactly once.** The first step collapses text
    to the distinct-WORD grain (word, frequency) — the classic BPE trainer
-   move — and every merge round runs on that bounded vocabulary table
-   (same distinct-grain argument as ``textstats.grouped_exact_quantiles``).
-   Pair counts are frequency-weighted integer sums, so shuffle order can
-   never flip a result.
+   move (Sennrich et al., ACL 2016) — and every merge round runs on that
+   bounded vocabulary table, collected once to the driver (same
+   distinct-grain argument as ``textstats.grouped_exact_quantiles``; the
+   sf0.01 documents hold 31 distinct words). Pair counts are
+   frequency-weighted integer sums, so no shuffle or iteration order can
+   flip a result.
 
 2. **Greedy merge = string replace.** A word's symbol sequence is encoded
    with per-symbol bars: ``hello`` → ``|h||e||l||l||o|``; merging pair
-   (l, l) rewrites ``|l||l|`` → ``|ll|``. Both Spark's ``replace`` and
-   DuckDB's ``replace`` substitute left-to-right and non-overlapping —
-   exactly BPE's greedy leftmost-non-overlapping application (``aaaa``
-   with merge (a,a) → ``aa aa``, not three overlapping pairs). No arrays,
-   no per-row Python, identical semantics in both engines
-   (``oracles.bpe_merges_sql``).
+   (l, l) rewrites ``|l||l|`` → ``|ll|`` (``_merge_rewrite``). Python's
+   ``str.replace``, Spark's ``replace`` and DuckDB's ``replace`` all
+   substitute left-to-right and non-overlapping — exactly BPE's greedy
+   leftmost-non-overlapping application (``aaaa`` with merge (a,a) →
+   ``aa aa``, not three overlapping pairs). No arrays, no per-row Python,
+   identical semantics in every engine (``oracles.bpe_merges_sql``).
 
 Pre-tokenization keeps ASCII ``[A-Za-z0-9']`` runs from the RAW text and
 lowercases the extracted words (ASCII-only lowering — engine-identical by
@@ -33,11 +35,19 @@ Unicode case-mapping differences).
 
 from __future__ import annotations
 
+import re
+from typing import Tuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # ASCII word runs, extracted before lowercasing (see module docstring).
 BPE_WORD_RE = "[A-Za-z0-9']+"
+# one symbol of a bar-delimited sequence
+_SYMBOL_RE = r"\|([^|]+)\|"
+_MERGES_SCHEMA = (
+    "iteration bigint, merge_left string, merge_right string, merged string, pair_count bigint"
+)
 
 
 def bpe_word_table(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -57,21 +67,10 @@ def bpe_word_table(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """Adjacent-symbol pair counts over the vocabulary table, weighted by
-    word frequency (every occurrence of a pair inside a word counts)."""
-    syms = words.select(
-        "wf", F.regexp_extract_all(F.col("seq"), F.lit(r"\|([^|]+)\|"), F.lit(1)).alias("s")
-    ).filter(F.size("s") >= 2)  # sequence(1, 0) is DESCENDING in Spark (CLAUDE.md)
-    pairs = syms.select(
-        "wf",
-        F.explode(
-            F.expr("transform(sequence(1, size(s) - 1), i -> struct(s[i-1] AS a, s[i] AS b))")
-        ).alias("p"),
-    )
-    return pairs.groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b")).agg(
-        F.sum("wf").cast("bigint").alias("cnt")
-    )
+def _merge_rewrite(left: str, right: str) -> Tuple[str, str]:
+    """(pattern, replacement) applying merge (left, right) to a
+    bar-delimited sequence: ``|left||right|`` → ``|leftright|``."""
+    return f"|{left}||{right}|", f"|{left}{right}|"
 
 
 def learn_bpe_merges(
@@ -81,54 +80,36 @@ def learn_bpe_merges(
 ) -> DataFrame:
     """Learn the first ``n_merges`` BPE merges of the corpus.
 
-    Each round: integer pair counts at vocabulary grain → the single top
-    pair (highest count, ties to lexicographically smallest (left, right)
-    — elected via ``min(struct(-cnt, a, b))``, a map-combined aggregation,
-    no sort) → one ``replace`` over every word's symbol sequence. Rounds
-    are statically unrolled (like ``graph.domain_pagerank``); the
-    vocabulary table is ``localCheckpoint``-ed per round so round k+1 does
-    not replay round k's plan.
+    ``bpe_word_table`` is the one Spark pass; its (wf, seq) rows are
+    collected once and the greedy rounds run on the driver. Each round:
+    adjacent-pair counts weighted by ``wf`` (every occurrence of a pair
+    inside a word counts) → the single top pair (highest count, ties to
+    the lexicographically smallest (left, right), i.e. the minimum of
+    ``(-cnt, a, b)``) → one leftmost non-overlapping replace over every
+    sequence (``_merge_rewrite``).
 
-    Output, one row per learned merge: iteration (1-based), merge_left,
-    merge_right, merged, pair_count. Corpora that run out of pairs yield
-    fewer than ``n_merges`` rows. Mirrored by ``oracles.bpe_merges_sql``.
+    Output, a local DataFrame with one row per learned merge: iteration
+    (1-based), merge_left, merge_right, merged, pair_count. Corpora that
+    run out of pairs yield fewer than ``n_merges`` rows. Mirrored by
+    ``oracles.bpe_merges_sql``.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    words = bpe_word_table(df, text_col).localCheckpoint(eager=False)
-    merge_tables = []
+    vocab = [(row["wf"], row["seq"]) for row in bpe_word_table(df, text_col).collect()]
+    merges = []
     for it in range(1, n_merges + 1):
-        top = _pair_counts(words).agg(
-            F.min(F.struct((-F.col("cnt")).alias("ncnt"), "a", "b")).alias("t")
-        )
-        merge_tables.append(
-            top.filter(F.col("t").isNotNull()).select(
-                F.lit(it).cast("bigint").alias("iteration"),
-                F.col("t.a").alias("merge_left"),
-                F.col("t.b").alias("merge_right"),
-                F.concat("t.a", "t.b").alias("merged"),
-                (-F.col("t.ncnt")).cast("bigint").alias("pair_count"),
-            )
-        )
-        # '\x01' can never occur in a seq (symbols are [a-z0-9'] runs),
-        # so a null top pair degrades to a no-op replace
-        pattern = F.when(
-            F.col("t").isNotNull(),
-            F.concat(F.lit("|"), F.col("t.a"), F.lit("||"), F.col("t.b"), F.lit("|")),
-        ).otherwise(F.lit("\x01"))
-        repl = F.when(
-            F.col("t").isNotNull(),
-            F.concat(F.lit("|"), F.col("t.a"), F.col("t.b"), F.lit("|")),
-        ).otherwise(F.lit("\x01"))
-        words = (
-            words.crossJoin(F.broadcast(top))
-            .select("word", "wf", F.replace(F.col("seq"), pattern, repl).alias("seq"))
-            .localCheckpoint(eager=False)
-        )
-    out = merge_tables[0]
-    for t in merge_tables[1:]:
-        out = out.unionAll(t)
-    return out
+        counts = {}
+        for wf, seq in vocab:
+            syms = re.findall(_SYMBOL_RE, seq)
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + wf
+        if not counts:
+            break  # no pairs left: every later round would be empty too
+        (a, b), cnt = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((it, a, b, a + b, cnt))
+        pattern, repl = _merge_rewrite(a, b)
+        vocab = [(wf, seq.replace(pattern, repl)) for wf, seq in vocab]
+    return df.sparkSession.createDataFrame(merges, _MERGES_SCHEMA)
 
 
 def apply_bpe_merges(
@@ -141,16 +122,18 @@ def apply_bpe_merges(
     """Encode the corpus with a learned merge list — the other half of the
     tokenizer lifecycle (learn once, encode every shard).
 
-    The merge list is NOT collected: step i's single merge row
-    (``iteration == i``) is broadcast-crossJoined onto the vocabulary and
-    applied with the exact pattern/replacement construction the trainer
-    uses, so apply-after-learn is replay-identical to the trainer's own
-    working table. Encoding runs at distinct-WORD grain (the bounded
-    vocabulary), then per-word BPE token counts join back to the per-doc
-    word occurrences — a plain join on ``word`` (Zipf-skewed key; AQE
-    skew-join handles the head, same documented stance as
-    ``textstats.token_rarity_table``) followed by one map-combined per-doc
-    rollup. Nothing corpus-sized is ever broadcast or collected.
+    The merge list (``n_merges`` rows at most) is collected once; step i
+    is the maximum (merge_left, merge_right) among its ``iteration == i``
+    rows, and a missing step is a no-op. Every step is then applied in
+    ONE projection of nested literal ``replace`` calls built by the
+    trainer's own ``_merge_rewrite``, so apply-after-learn is
+    replay-identical to the trainer's working vocabulary. Encoding runs
+    at distinct-WORD grain (the bounded vocabulary), then per-word BPE
+    token counts join back to the per-doc word occurrences — a plain join
+    on ``word`` (Zipf-skewed key; AQE skew-join handles the head, same
+    documented stance as ``textstats.token_rarity_table``) followed by
+    one map-combined per-doc rollup. Nothing corpus-sized is ever
+    broadcast or collected.
 
     Output per document (docs with zero ASCII words produce no row —
     inner-join semantics, mirrored by the oracle): id, n_words,
@@ -160,45 +143,23 @@ def apply_bpe_merges(
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    steps = {}
+    for row in merges.filter(F.col("iteration").between(1, n_merges)).collect():
+        pair = (row["merge_left"], row["merge_right"])
+        steps[row["iteration"]] = max(steps.get(row["iteration"], pair), pair)
     occ = df.select(
         F.col(id_col),
         F.explode(F.regexp_extract_all(F.col(text_col), F.lit(BPE_WORD_RE), F.lit(0))).alias(
             "raw"
         ),
     ).select(id_col, F.lower(F.col("raw")).alias("word"))
-    vocab = occ.select("word").distinct().select(
-        "word", F.regexp_replace(F.col("word"), "(.)", r"|$1|").alias("seq")
-    )
-    for it in range(1, n_merges + 1):
-        # agg(max) yields exactly one row even when the merge list is
-        # shorter than n_merges (null t → the same no-op degrade as the
-        # trainer); a bare crossJoin on an empty step table would drop
-        # every vocabulary row instead
-        step = (
-            merges.filter(F.col("iteration") == it)
-            .select(
-                F.struct(
-                    F.col("merge_left").alias("a"), F.col("merge_right").alias("b")
-                ).alias("t")
-            )
-            .agg(F.max("t").alias("t"))
-        )
-        pattern = F.when(
-            F.col("t").isNotNull(),
-            F.concat(F.lit("|"), F.col("t.a"), F.lit("||"), F.col("t.b"), F.lit("|")),
-        ).otherwise(F.lit("\x01"))
-        repl = F.when(
-            F.col("t").isNotNull(),
-            F.concat(F.lit("|"), F.col("t.a"), F.col("t.b"), F.lit("|")),
-        ).otherwise(F.lit("\x01"))
-        vocab = (
-            vocab.crossJoin(F.broadcast(step))
-            .select("word", F.replace(F.col("seq"), pattern, repl).alias("seq"))
-            .localCheckpoint(eager=False)
-        )
-    word_tokens = vocab.select(
+    seq = F.regexp_replace(F.col("word"), "(.)", r"|$1|")
+    for it in sorted(steps):
+        pattern, repl = _merge_rewrite(*steps[it])
+        seq = F.replace(seq, F.lit(pattern), F.lit(repl))
+    word_tokens = occ.select("word").distinct().select(
         "word",
-        F.size(F.regexp_extract_all(F.col("seq"), F.lit(r"\|([^|]+)\|"), F.lit(1)))
+        F.size(F.regexp_extract_all(seq, F.lit(_SYMBOL_RE), F.lit(1)))
         .cast("bigint")
         .alias("n_tokens_word"),
     )

@@ -27,3 +27,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(scope="session")
+def jobs_launched(spark):
+    """``jobs_launched()`` → how many jobs the scheduler has submitted so
+    far: every job, tagged or not, from any driver thread (the status
+    store's job list stops growing at ``spark.ui.retainedJobs``)."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs

@@ -1032,6 +1032,24 @@ def test_pq_search_tolerates_null_embeddings(spark, sf_dir):
         train_pq_codebooks(emb.filter(F.lit(False)), n_subspaces=n_sub)
 
 
+def test_pq_training_jobs_do_not_grow_with_subspaces(spark, sf_dir, jobs_launched):
+    """Every subspace trains in the same seed collect and Lloyd-step jobs,
+    so 4 subspaces launch exactly as many jobs as 2."""
+    from dss_plugin_google_cloud_vision_spark.operators.similarity import (
+        train_pq_codebooks,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+    def jobs(n_sub):
+        before = jobs_launched()
+        books = train_pq_codebooks(emb, n_subspaces=n_sub, n_codes=8, train_iterations=2)
+        assert len(books) == n_sub
+        return jobs_launched() - before
+
+    assert jobs(4) == jobs(2)
+
+
 # ---------------------------------------------------------------------------
 # semantic dedup (SemDeDup-style cluster-blocked cosine marking)
 # ---------------------------------------------------------------------------
@@ -1130,12 +1148,6 @@ def test_cluster_max_lower_dots_matches_reference_fold(spark):
         for m in range(members):
             vec = [rng.uniform(-1.0, 1.0) for _ in range(dim)]
             rows.append((cid * 100 + m, cid, vec))
-    df = spark.createDataFrame(rows, "vec_id bigint, cluster int, _e array<double>")
-
-    got = {
-        r["vec_id"]: r["_max_dot"]
-        for r in cluster_max_lower_dots(df, "vec_id", pair_block=7).collect()
-    }
 
     def fold_dot(a, b):
         acc = 0.0
@@ -1143,14 +1155,40 @@ def test_cluster_max_lower_dots_matches_reference_fold(spark):
             acc = acc + x * y
         return acc
 
-    by_cluster = {}
-    for vid, cid, vec in rows:
-        by_cluster.setdefault(cid, []).append((vid, vec))
-    want = {}
-    for members in by_cluster.values():
-        members.sort()
-        for j in range(1, len(members)):
-            want[members[j][0]] = max(
-                fold_dot(members[i][1], members[j][1]) for i in range(j)
-            )
-    assert got == want  # bit-exact doubles, exact row set
+    def check(rows, id_type):
+        df = spark.createDataFrame(rows, f"vec_id {id_type}, cluster int, _e array<double>")
+        got = {
+            r["vec_id"]: r["_max_dot"]
+            for r in cluster_max_lower_dots(df, "vec_id", pair_block=7).collect()
+        }
+        by_cluster = {}
+        for vid, cid, vec in rows:
+            by_cluster.setdefault(cid, []).append((vid, vec))
+        want = {}
+        for members in by_cluster.values():
+            members.sort()
+            for j in range(1, len(members)):
+                want[members[j][0]] = max(
+                    fold_dot(members[i][1], members[j][1]) for i in range(j)
+                )
+        assert got == want  # bit-exact doubles, exact row set
+
+    check(rows, "bigint")
+    # string ids: the singleton cluster's empty result carries the string
+    # id column, and "lower" is the string order
+    check([(f"v{vid}", cid, vec) for vid, cid, vec in rows], "string")
+
+
+def test_cluster_max_lower_dots_rejects_repeated_id(spark):
+    """A repeated id inside one cluster would pair with itself as its own
+    lower partner; the kernel names it instead."""
+    from pyspark.errors import PythonException
+
+    from dss_plugin_google_cloud_vision_spark.operators.similarity import (
+        cluster_max_lower_dots,
+    )
+
+    rows = [(1, 0, [1.0, 0.0]), (2, 0, [0.0, 1.0]), (2, 0, [0.6, 0.8]), (2, 1, [1.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id bigint, cluster int, _e array<double>")
+    with pytest.raises(PythonException, match="vec_id 2 repeats within one cluster group"):
+        cluster_max_lower_dots(df, "vec_id").collect()

@@ -70,6 +70,20 @@ def test_n_merges_validation(spark):
         learn_bpe_merges(None, n_merges=0)
 
 
+def test_learning_jobs_do_not_grow_with_n_merges(spark, jobs_launched):
+    """The corpus is collected once at word grain and every round runs on
+    the driver: 6 merges launch exactly as many jobs as 1."""
+    texts = [f"token{i % 7} repeat repeat value{i % 3}" for i in range(40)]
+    df = spark.createDataFrame([Row(text=t) for t in texts])
+
+    def jobs(n):
+        before = jobs_launched()
+        assert len(learn_bpe_merges(df, n_merges=n).collect()) == n
+        return jobs_launched() - before
+
+    assert jobs(6) == jobs(1)
+
+
 # --------------------------------------------------------- apply / encode
 
 
@@ -159,6 +173,22 @@ def test_encode_merge_list_shorter_than_n(spark):
     merges = learn_bpe_merges(df, n_merges=1)  # only (a,b) exists
     got = apply_bpe_merges(df, merges, n_merges=4).collect()
     assert [(r["n_words"], r["n_bpe_tokens"]) for r in got] == [(2, 2)]
+
+
+def test_encode_build_launches_at_most_one_job(spark, jobs_launched):
+    """Building the encode plan collects the merge list once; every merge
+    is then a literal in one projection, so no per-step job runs."""
+    from dss_plugin_google_cloud_vision_spark.operators.tokenizer import (
+        apply_bpe_merges,
+    )
+
+    texts = [f"token{i % 7} repeat repeat value{i % 3}" for i in range(40)]
+    df = spark.createDataFrame([Row(doc_id=i, text=t) for i, t in enumerate(texts)])
+    merges = learn_bpe_merges(df, n_merges=6)
+    before = jobs_launched()
+    encoded = apply_bpe_merges(df, merges, n_merges=6)
+    assert jobs_launched() - before <= 1
+    assert encoded.count() == len(texts)
 
 
 def test_encode_validates_n(spark):
