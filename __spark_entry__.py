@@ -12,6 +12,7 @@ DuckDB hashes agree bit-for-bit.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -40,28 +41,41 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 _PYFILES_SESSIONS: set = set()
 
 
+@functools.cache
+def _package_zip() -> str:
+    """This checkout's package as a zip, built once per process into a
+    fresh temporary directory: a zip at a shared fixed path could hold
+    another checkout's code, and the workers put shipped files ahead of
+    PYTHONPATH."""
+    import atexit
+    import shutil
+    import tempfile
+    import zipfile
+
+    zip_dir = tempfile.mkdtemp(prefix="spark_webtext_engine_")
+    atexit.register(shutil.rmtree, zip_dir, ignore_errors=True)
+    pkg_zip = os.path.join(zip_dir, "spark_webtext_engine_entry.zip")
+    pkg_root = os.path.join(REPO_ROOT, "dss_plugin_google_cloud_vision_spark")
+    with zipfile.ZipFile(pkg_zip, "w", zipfile.ZIP_DEFLATED) as zf:
+        for dirpath, _dirs, filenames in os.walk(pkg_root):
+            for filename in filenames:
+                if filename.endswith(".py"):
+                    full = os.path.join(dirpath, filename)
+                    zf.write(full, os.path.relpath(full, REPO_ROOT))
+    return pkg_zip
+
+
 def _ensure_workers_can_import(spark: SparkSession) -> None:
     """Python workers must be able to import the engine package. If the
     driver created its session before this module set PYTHONPATH, the
-    worker daemon may lack /root/repo — ship the package via addPyFile
+    worker daemon may lack the checkout — ship the package via addPyFile
     (idempotent per session)."""
     key = id(spark.sparkContext)
     if key in _PYFILES_SESSIONS:
         return
     _PYFILES_SESSIONS.add(key)
-    import zipfile
-
-    pkg_zip = "/tmp/spark_webtext_engine_entry.zip"
-    if not os.path.exists(pkg_zip):
-        pkg_root = os.path.join(REPO_ROOT, "dss_plugin_google_cloud_vision_spark")
-        with zipfile.ZipFile(pkg_zip, "w", zipfile.ZIP_DEFLATED) as zf:
-            for dirpath, _dirs, filenames in os.walk(pkg_root):
-                for filename in filenames:
-                    if filename.endswith(".py"):
-                        full = os.path.join(dirpath, filename)
-                        zf.write(full, os.path.relpath(full, REPO_ROOT))
     try:
-        spark.sparkContext.addPyFile(pkg_zip)
+        spark.sparkContext.addPyFile(_package_zip())
     except Exception:  # noqa: BLE001 — e.g. Connect sessions; PYTHONPATH fallback applies
         pass
 
@@ -955,8 +969,7 @@ def q_skew_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time tumbling-window aggregation (the batch shape of the
-    streaming windowed_host_counts operator): events per type per day."""
+    """Event-time tumbling-window aggregation: events per type per day."""
     events = _table(spark, sf_dir, "events")
     # the day is emitted as a yyyy-MM-dd STRING: a Spark date column lands
     # in the driver's pandas canonicalizer as datetime64 and hash-mismatches

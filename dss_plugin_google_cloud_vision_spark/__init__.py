@@ -24,9 +24,9 @@ batched, vectorized extraction inside ``mapInArrow`` stages:
   reference's content-list sort bug).
 - ``operators.artifacts`` — S6 span-overlay artifact column + executor-side
   blob sink.
-- ``operators.resume`` / ``sources.snapshots`` — checkpoint-resume
-  anti-join, per-partition lineage metrics, and an Iceberg-analogue
-  snapshot log (atomic manifests, time travel).
+- ``sources.snapshots`` — checkpoint-resume: an Iceberg-analogue
+  snapshot log (atomic manifests, time travel), the resume anti-join and
+  per-partition lineage metrics.
 - ``operators.dedup`` / ``operators.similarity`` / ``operators.textstats``
   / ``operators.sessions`` — large-scale training-data pipeline operators
   (dedup incl. LSH blocking + connected-component collapse, ANN

@@ -17,7 +17,7 @@ False, compact separators — the byte-identity surface depends on it.
 from __future__ import annotations
 
 import json
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
 # (kind, start, end, block_id) — offsets into the page's extracted text
 Span = Tuple[str, int, int, int]
@@ -55,12 +55,3 @@ def build_page_response(
         }
     }
     return json.dumps(payload, ensure_ascii=False, separators=(", ", ": "))
-
-
-def parse_page_response(raw: str) -> Optional[dict]:
-    """Lenient parse (reference ``safe_json_loads`` semantics:
-    python-lib/plugin_io_utils.py:65-78): invalid → None."""
-    try:
-        return json.loads(raw)
-    except (TypeError, ValueError):
-        return None

@@ -433,7 +433,8 @@ def append_to_lexical_index(
     scores (the (id, token)-distinct invariant ``_term_scores`` counts
     on). The probe is a column-pruned scan of the id column; at a scale
     where that hurts, disable it only when the ingest pipeline itself
-    guarantees exactly-once ids (e.g. the streaming ledger pattern).
+    guarantees exactly-once ids (e.g. an anti-join against the
+    ``sources.snapshots`` log).
 
     Crash contract: the postings append and the _meta rewrite are two
     non-atomic writes. A crash between them leaves the increment's

@@ -8,8 +8,6 @@ behavioral documents). Batch form: two window passes over ONE
 (key, ts, tie-break) sort — a single shuffle on the key; the session id is
 the running count of gap-breaks (the standard lag + cumulative-sum
 formulation, fully SQL-expressible, hence oracle-checked).
-
-Streaming form: ``streaming.sessionize.session_state_stream``.
 """
 
 from __future__ import annotations

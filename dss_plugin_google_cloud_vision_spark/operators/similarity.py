@@ -240,16 +240,6 @@ def _hyperplane(dim: int, plane: int) -> List[float]:
     return components
 
 
-def signature_bits(vec_col: Column, dim: int, n_planes: int) -> Column:
-    """Sign pattern of the vector against ``n_planes`` deterministic
-    hyperplanes, packed into an int (bit p set iff dot(vec, plane_p) > 0)."""
-    bits = []
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(v) for v in _hyperplane(dim, p)])
-        bits.append(F.when(dot_product(vec_col, plane) > 0, F.lit(2**p)).otherwise(F.lit(0)))
-    return sum(bits[1:], bits[0]).cast("int")
-
-
 def lsh_bucketed_topk(
     df: DataFrame,
     query_vector: Sequence[float],

@@ -201,7 +201,7 @@ def hll_estimate_from_registers(
 ) -> DataFrame:
     """One-row raw estimate from an already-built (bucket, register)
     table — e.g. the max-merge of several shards' or arrival waves'
-    register tables (``streaming.sketches``). Missing buckets contribute
+    register tables. Missing buckets contribute
     the full ``1 << RMAX``; an all-missing (empty) table degrades to the
     raw formula's floor, never NULL. Output: m, registers_set, sum_pow,
     hll_estimate.

@@ -26,11 +26,6 @@ def tokens(text_col: str = "text") -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def token_count(text_col: str = "text") -> Column:
-    """Whitespace token count."""
-    return F.size(tokens(text_col))
-
-
 def regex_token_count(text_col: str = "text") -> Column:
     """BPE-ish token count: alpha runs, digit runs, and single punctuation
     marks each count as one token."""
@@ -62,11 +57,6 @@ def quality_columns(text_col: str = "text") -> Dict[str, Column]:
             n_chars > 0, F.round(non_alnum * 1000 / n_chars).cast("bigint")
         ).otherwise(F.lit(0)),
     }
-
-
-def quality_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    columns = quality_columns(text_col)
-    return df.select(F.col(id_col), *[expr.alias(name) for name, expr in columns.items()])
 
 
 def fingerprint_column(text_col: str = "text") -> Column:
@@ -104,9 +94,8 @@ def rolling_hash_column(
     left fold ``acc = (acc*256 + cp) % m`` — every intermediate fits in
     int64, so Spark and DuckDB agree bit-for-bit (the DuckDB mirror's
     ``list_reduce`` seeds with the first element, which equals the
-    zero-seeded fold since cp < m). The streaming form of document
-    fingerprinting: a content-defined chunker extends the same recurrence
-    one position at a time.
+    zero-seeded fold since cp < m). A content-defined chunker extends the
+    same recurrence one position at a time.
 
     Scale notes: the fold runs over a PRE-SPLIT char array — the naive
     per-position ``substr(text, i, 1)`` form is O(i) per step on UTF8
@@ -385,12 +374,6 @@ def langid_detected_expr() -> Column:
     return F.when(best == 0, F.lit("")).otherwise(expr)
 
 
-def langid_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Relational language ID: see ``langid_detected_expr`` for the rule."""
-    with_hits = df.withColumns(langid_hit_columns(text_col))
-    return with_hits.select(F.col(id_col), langid_detected_expr().alias("lang_detected"))
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (training-data hygiene pass)
 # ---------------------------------------------------------------------------
@@ -517,9 +500,8 @@ def gopher_columns(
     min_stopword_distinct: int = 2,
 ) -> Dict[str, Column]:
     """The Gopher gate as raw column expressions (all row-local), so the
-    gate composes into ANY projection — batch tables
-    (``gopher_quality_table``) and stateless streaming filters
-    (``streaming.curation``) alike."""
+    gate composes into ANY projection — the batch table
+    (``gopher_quality_table``) or any caller's own filter."""
     toks = tokens(text_col)
     n_words = F.size(toks)
     char_sum = F.aggregate(toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t))

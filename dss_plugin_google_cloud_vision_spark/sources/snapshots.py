@@ -21,6 +21,17 @@ Single-writer is assumed (Iceberg adds optimistic-retry CAS on the
 metadata pointer; on a shared filesystem ``os.replace`` of the manifest is
 atomic and the job scheduler serializes increments).
 
+Resume is one increment at a time (``run_with_snapshot_resume``): pin
+the current snapshot, anti-join the input against its keys (only the key
+column is read), extract what remains and commit it.
+
+Lineage is one row per extraction task partition (``with_lineage``):
+partition id, page rows out, success/error counts, wall ms — the
+reference's post-run metrics (parallelizer.py:242-248) persisted per
+partition, the north rule's "per-partition lineage rows". A caller wraps
+its extraction with it:
+``build_extraction=lambda df: with_lineage(extract_pages(df, ...), ...)``.
+
 Reference parity: the reference has no state at all (re-runs recompute
 everything); the snapshot log + anti-join is the upgraded semantic named
 in BASELINE.json (``checkpoint-resume via Iceberg snapshots``).
@@ -31,14 +42,21 @@ from __future__ import annotations
 import json
 import os
 import re
+import time
 import uuid
-from typing import List, Optional
+from typing import Iterable, Iterator, List, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "snapshots"
 DATA_DIR = "data"
 _MANIFEST_NAME = re.compile(r"^\d{8}\.json$")
+
+LINEAGE_DDL = (
+    "run_id string, partition_id int, n_input bigint, n_output bigint, "
+    "n_success bigint, n_error bigint, elapsed_ms bigint"
+)
 
 
 class SnapshotLog:
@@ -217,3 +235,51 @@ def run_with_snapshot_resume(
         "snapshot_rows": table.count(),
         "snapshot_keys": table.select(key).distinct().count(),
     }
+
+
+def with_lineage(
+    extracted: DataFrame,
+    response_column: str,
+    lineage_dir: str,
+    run_id: str,
+) -> DataFrame:
+    """Wrap an extracted DataFrame so that, as each task partition is
+    consumed, a lineage row (``LINEAGE_DDL``) is written to
+    ``lineage_dir`` as ``<run_id>-p<partition>.json`` (local/shared FS
+    path; on a cluster this would be an object-store prefix or an Iceberg
+    metrics table). Idempotent per (run_id, partition_id): retried tasks
+    overwrite their own file. Read the rows back as a table with
+    ``spark.read.schema(LINEAGE_DDL).json(lineage_dir)``."""
+    os.makedirs(lineage_dir, exist_ok=True)
+    schema = extracted.schema
+    response_idx = extracted.columns.index(response_column)
+
+    def audit(record_batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from pyspark import TaskContext
+
+        context = TaskContext.get()
+        partition_id = context.partitionId() if context is not None else -1
+        started = time.perf_counter()
+        n_output = n_success = 0
+        for rb in record_batches:
+            responses = rb.column(response_idx)
+            n_output += rb.num_rows
+            n_success += sum(1 for value in responses.to_pylist() if value != "")
+            yield rb
+        elapsed_ms = int((time.perf_counter() - started) * 1000)
+        row = {
+            "run_id": run_id,
+            "partition_id": partition_id,
+            "n_input": n_output,  # page rows seen by this wrapper
+            "n_output": n_output,
+            "n_success": n_success,
+            "n_error": n_output - n_success,
+            "elapsed_ms": elapsed_ms,
+        }
+        path = os.path.join(lineage_dir, f"{run_id}-p{partition_id:05d}.json")
+        tmp_path = path + ".tmp"
+        with open(tmp_path, "w") as handle:
+            json.dump(row, handle)
+        os.replace(tmp_path, path)
+
+    return extracted.mapInArrow(audit, schema)

@@ -18,8 +18,9 @@ from dss_plugin_google_cloud_vision_spark.operators.similarity import (
     lsh_bucketed_topk,
 )
 from dss_plugin_google_cloud_vision_spark.operators.textstats import (
-    langid_table,
-    quality_table,
+    langid_detected_expr,
+    langid_hit_columns,
+    quality_columns,
 )
 
 
@@ -78,10 +79,14 @@ def test_quality_and_langid_basics(spark):
         [(1, "the cat and the dog"), (2, ""), (3, "le chat et la fenêtre dans le jardin")],
         "doc_id int, text string",
     )
-    quality = {r["doc_id"]: r for r in quality_table(df).collect()}
+    quality_cols = [expr.alias(name) for name, expr in quality_columns().items()]
+    quality = {r["doc_id"]: r for r in df.select("doc_id", *quality_cols).collect()}
     assert quality[1]["n_tokens"] == 5
     assert quality[1]["stopword_ratio_milli"] == 600  # the, and, the → 3/5
-    langs = {r["doc_id"]: r["lang_detected"] for r in langid_table(df).collect()}
+    detected = df.withColumns(langid_hit_columns()).select(
+        "doc_id", langid_detected_expr().alias("lang_detected")
+    )
+    langs = {r["doc_id"]: r["lang_detected"] for r in detected.collect()}
     assert langs[1] == "en"
     assert langs[3] == "fr"
     assert langs[2] == ""

@@ -1,6 +1,6 @@
 # -*- coding: utf-8 -*-
 """Multimodal plumbing tests (schema/batch-shape/determinism/error capture)
-and streaming exactly-once extraction tests."""
+and media codec round trips."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,10 +11,6 @@ from dss_plugin_google_cloud_vision_spark.operators.multimodal import (
     resize_image,
     sample_video_frames,
     synthetic_media_df,
-)
-from dss_plugin_google_cloud_vision_spark.sources.pages import pages_df
-from dss_plugin_google_cloud_vision_spark.streaming.stream_extract import (
-    stream_extract_available_now,
 )
 
 
@@ -104,48 +100,6 @@ def test_frame_sampling_fanout(spark):
         assert row["resize_error"] == ""
         pixels, codec = decode_image(bytes(row["resized"]))
         assert codec == "png" and pixels.shape == (20, 32, 3)
-
-
-def test_streaming_exactly_once(spark, tmp_path):
-    input_dir = str(tmp_path / "in")
-    output_dir = str(tmp_path / "out")
-    checkpoint = str(tmp_path / "ckpt")
-
-    # increment 1: 32 docs
-    pages_df(spark, 32, partitions=2).write.mode("append").parquet(input_dir)
-    q = stream_extract_available_now(spark, input_dir, output_dir, checkpoint)
-    q.awaitTermination(300)
-    first = spark.read.parquet(output_dir)
-    urls_first = {r["url"] for r in first.select("url").distinct().collect()}
-    assert len(urls_first) == 32
-
-    # increment 2: 16 more docs (ids 32..47) land as new files
-    import pyarrow  # noqa: F401
-
-    from dss_plugin_google_cloud_vision_spark.sources.pages import iter_pages
-
-    rows = [
-        (p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
-        for p in iter_pages(32, 48)
-    ]
-    spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
-    ).coalesce(1).write.mode("append").parquet(input_dir)
-
-    q2 = stream_extract_available_now(spark, input_dir, output_dir, checkpoint)
-    q2.awaitTermination(300)
-    final = spark.read.parquet(output_dir)
-    # every url exactly the rows a clean run would produce — nothing doubled
-    per_url = final.groupBy("url").count()
-    from dss_plugin_google_cloud_vision_spark.operators.pages import extract_pages
-
-    clean = extract_pages(
-        spark.read.parquet(input_dir), drop_payload=True
-    ).groupBy("url").count()
-    got = {r["url"]: r["count"] for r in per_url.collect()}
-    expected = {r["url"]: r["count"] for r in clean.collect()}
-    assert got == expected
-    assert len(got) == 48
 
 
 def test_png_ppm_codec_roundtrip_and_filters():

@@ -27,25 +27,26 @@ def test_filter_pushdown_to_parquet(spark, tmp_path):
     assert "html" not in plan.split("ReadSchema")[1][:200], plan
 
 
+def _resume_todo(spark, root):
+    from dss_plugin_google_cloud_vision_spark.sources.snapshots import (
+        SnapshotLog,
+        remaining_inputs_snapshot,
+    )
+
+    log = SnapshotLog(root)
+    log.commit(extract_pages(pages_df(spark, 32, partitions=2), drop_payload=True))
+    return remaining_inputs_snapshot(pages_df(spark, 48, partitions=2), spark, log, "url")
+
+
 def test_column_pruning_resume_scan(spark, tmp_path):
     """The resume anti-join must read ONLY the key column of the snapshot."""
-    path = str(tmp_path / "snapshot")
-    extract_pages(pages_df(spark, 32, partitions=2), drop_payload=True).write.parquet(path)
-    from dss_plugin_google_cloud_vision_spark.operators.resume import remaining_inputs
-
-    todo = remaining_inputs(pages_df(spark, 48, partitions=2), spark, path, "url")
-    plan = _plan(todo)
+    plan = _plan(_resume_todo(spark, str(tmp_path / "snapshot")))
     scans = plan.split("ReadSchema: ")[1:]
     assert any(s.startswith("struct<url:string>") for s in scans), plan
 
 
 def test_anti_join_is_broadcast(spark, tmp_path):
-    path = str(tmp_path / "snapshot2")
-    extract_pages(pages_df(spark, 32, partitions=2), drop_payload=True).write.parquet(path)
-    from dss_plugin_google_cloud_vision_spark.operators.resume import remaining_inputs
-
-    todo = remaining_inputs(pages_df(spark, 48, partitions=2), spark, path, "url")
-    plan = _plan(todo)
+    plan = _plan(_resume_todo(spark, str(tmp_path / "snapshot2")))
     # small done-set → AQE/broadcast anti join, no sort-merge
     assert "BroadcastHashJoin" in plan or "AdaptiveSparkPlan" in plan, plan
 

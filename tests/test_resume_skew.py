@@ -1,17 +1,9 @@
 # -*- coding: utf-8 -*-
 """Checkpoint-resume (FIXTURES.md §5) and skew-salting tests."""
 
-import shutil
-import tempfile
-
 from pyspark.sql import functions as F
 
 from dss_plugin_google_cloud_vision_spark.operators.pages import extract_pages
-from dss_plugin_google_cloud_vision_spark.operators.resume import (
-    read_lineage,
-    remaining_inputs,
-    run_with_resume,
-)
 from dss_plugin_google_cloud_vision_spark.operators.skew import (
     hot_hosts,
     per_host_counts_two_phase,
@@ -20,6 +12,13 @@ from dss_plugin_google_cloud_vision_spark.operators.skew import (
     with_host,
 )
 from dss_plugin_google_cloud_vision_spark.sources.pages import tiny_pages_df
+from dss_plugin_google_cloud_vision_spark.sources.snapshots import (
+    LINEAGE_DDL,
+    SnapshotLog,
+    remaining_inputs_snapshot,
+    run_with_snapshot_resume,
+    with_lineage,
+)
 
 N_ROWS = 48
 
@@ -28,26 +27,30 @@ def _extract(df):
     return extract_pages(df, drop_payload=True)
 
 
+def _audited(lineage_dir, run_id):
+    return lambda df: with_lineage(_extract(df), "content_api_response", lineage_dir, run_id)
+
+
 def test_resume_completes_partial_run(spark, tmp_path):
     df = tiny_pages_df(spark, N_ROWS)
-    out = str(tmp_path / "snapshot")
+    log = SnapshotLog(str(tmp_path / "snapshot"))
     lineage_dir = str(tmp_path / "lineage")
 
     # run 1: only a subset survives (induced partial run)
     partial = df.filter(F.crc32(F.col("url")) % 3 != 0)
-    run_with_resume(spark, partial, _extract, out, lineage_dir=lineage_dir, run_id="r1")
-    done_urls_1 = {r["url"] for r in spark.read.parquet(out).select("url").distinct().collect()}
+    run_with_snapshot_resume(spark, partial, _audited(lineage_dir, "r1"), log, run_id="r1")
+    done_urls_1 = {r["url"] for r in log.read(spark).select("url").distinct().collect()}
     assert 0 < len(done_urls_1) < N_ROWS
 
     # run 2: full input; only the missing urls must be extracted
-    todo = remaining_inputs(df, spark, out, "url")
+    todo = remaining_inputs_snapshot(df, spark, log, "url")
     todo_urls = {r["url"] for r in todo.select("url").collect()}
     assert todo_urls.isdisjoint(done_urls_1)
     assert len(todo_urls) == N_ROWS - len(done_urls_1)
-    run_with_resume(spark, df, _extract, out, lineage_dir=lineage_dir, run_id="r2")
+    run_with_snapshot_resume(spark, df, _audited(lineage_dir, "r2"), log, run_id="r2")
 
     # converged snapshot equals a clean single run: same url set, no dupes
-    snapshot = spark.read.parquet(out)
+    snapshot = log.read(spark)
     assert snapshot.select("url").distinct().count() == N_ROWS
     clean = _extract(df)
     assert snapshot.count() == clean.count()
@@ -60,10 +63,10 @@ def test_resume_completes_partial_run(spark, tmp_path):
     assert snap_rows == clean_rows
 
     # run 3 on a converged snapshot is a no-op
-    assert remaining_inputs(df, spark, out, "url").count() == 0
+    assert remaining_inputs_snapshot(df, spark, log, "url").count() == 0
 
     # lineage covers both runs and accounts for every page row exactly once
-    lineage = read_lineage(spark, lineage_dir)
+    lineage = spark.read.schema(LINEAGE_DDL).json(lineage_dir)
     totals = lineage.agg(F.sum("n_output").alias("pages"), F.sum("n_error").alias("errors")).collect()[0]
     assert totals["pages"] == clean.count()
     errors_expected = clean.filter(F.col("content_api_response") == "").count()

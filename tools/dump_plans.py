@@ -7,6 +7,7 @@ evidence, regenerated after operator changes."""
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -27,12 +28,15 @@ def main() -> None:
         extract_pages,
         extract_pages_typed,
     )
-    from dss_plugin_google_cloud_vision_spark.operators.resume import remaining_inputs
     from dss_plugin_google_cloud_vision_spark.plans.extract_pipeline import (
         run_extraction_pipeline,
     )
     from dss_plugin_google_cloud_vision_spark.session import get_spark
     from dss_plugin_google_cloud_vision_spark.sources.pages import pages_df
+    from dss_plugin_google_cloud_vision_spark.sources.snapshots import (
+        SnapshotLog,
+        remaining_inputs_snapshot,
+    )
 
     spark = get_spark(app_name="dump-plans", cores=8)
     tmp = "/tmp/plans_pages.parquet"
@@ -70,8 +74,9 @@ def main() -> None:
             formatted(plan.documents),
         )
     )
-    snapshot = "/tmp/plans_snapshot.parquet"
-    extract_pages(stored, drop_payload=True).write.mode("overwrite").parquet(snapshot)
+    shutil.rmtree("/tmp/plans_snapshot", ignore_errors=True)
+    snapshot = SnapshotLog("/tmp/plans_snapshot")
+    snapshot.commit(extract_pages(stored, drop_payload=True))
     sections.append(
         (
             "Resume anti-join",
@@ -79,7 +84,7 @@ def main() -> None:
             "resuming against a 100 TB output costs a single-column scan; the "
             "join broadcasts when the done-set is small and AQE re-plans "
             "otherwise.",
-            formatted(remaining_inputs(stored, spark, snapshot, "url")),
+            formatted(remaining_inputs_snapshot(stored, spark, snapshot, "url")),
         )
     )
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
