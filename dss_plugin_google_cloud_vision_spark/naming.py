@@ -13,9 +13,6 @@ from __future__ import annotations
 from collections import OrderedDict, namedtuple
 from typing import List, NamedTuple, Sequence
 
-PATH_COLUMN = "path"
-URL_COLUMN = "url"
-
 API_COLUMN_NAMES_DESCRIPTION_DICT = OrderedDict(
     [
         ("response", "Raw response from the extraction stage in JSON format"),

@@ -25,9 +25,13 @@ Scale notes:
   shuffle), ``paragraph_dedup`` (corpus-wide keep-first, skew-robust
   min-agg election), ``duplicate_span_removal`` (repeated n-token windows,
   hash+positions-only shuffles).
-- Incremental: ``incremental_exact_dedup`` (fingerprint anti-join against
-  the persisted corpus), ``incremental_near_dup_filter`` (increment bands
-  vs the persisted corpus band table).
+- Incremental: ``incremental_near_dup_filter`` (increment bands vs the
+  persisted corpus band table). Cross-run exact dedup is a composition
+  over the one incremental-write path, the snapshot log:
+  ``run_with_snapshot_resume(spark, new.withColumn("_fp", F.md5("text")),
+  lambda todo: exact_dedup_keep_first(todo), log, key="_fp")`` — the
+  anti-join reads only the committed ``_fp`` column, and each increment
+  publishes atomically (``sources.snapshots``).
 - Decontamination: ``ngram_contamination`` (broadcast benchmark shingle
   set, zero shingle-text shuffle).
 """
@@ -129,56 +133,6 @@ def exact_dedup_keep_first(df: DataFrame, id_col: str = "doc_id", text_col: str 
         F.min(id_col).alias(id_col)
     )
     return df.join(keepers, id_col, "left_semi")
-
-
-def _corpus_path_exists(spark, path: str) -> bool:
-    """Scheme-agnostic existence probe via the Hadoop FileSystem API (works
-    for local paths, HDFS, and object stores alike) — distinguishes
-    "corpus not yet created" from every other read failure."""
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hadoop_path))
-
-
-def incremental_exact_dedup(
-    spark,
-    new_df: DataFrame,
-    output_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    return_corpus_size: bool = False,
-) -> int | None:
-    """Cross-run exact dedup (the dedup analogue of checkpoint-resume):
-    drop rows whose text fingerprint already exists in the deduplicated
-    corpus at ``output_path``, dedup the increment itself (keep-first on
-    min id), and append the survivors — which carry a ``_fp`` md5 column,
-    so the history scan of the next increment is a single 32-byte column
-    (column pruning), never the text.
-
-    Returns None by default; ``return_corpus_size=True`` counts the corpus
-    afterwards — a deliberate full-metadata scan per increment, so it is
-    opt-in (at 100 TB the count belongs in table metadata, not here).
-
-    Call once per arriving increment; re-running on already-ingested data
-    is a no-op (every fingerprint already present).
-
-    Only a genuinely MISSING corpus path is treated as the first
-    increment: any other read failure (permissions, corrupt footer,
-    transient storage error) propagates — swallowing it would silently
-    skip the anti-join and re-admit duplicates."""
-    fingerprinted = new_df.withColumn("_fp", F.md5(F.col(text_col)))
-    if _corpus_path_exists(spark, output_path):
-        seen = spark.read.parquet(output_path).select("_fp").distinct()
-        fresh = fingerprinted.join(seen, "_fp", "left_anti")
-    else:  # first increment: no corpus yet
-        fresh = fingerprinted
-    keepers = fresh.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-    surviving = fresh.join(keepers, [id_col, "_fp"], "left_semi")
-    surviving.write.mode("append").parquet(output_path)
-    if return_corpus_size:
-        return spark.read.parquet(output_path).count()
-    return None
 
 
 def minhash_signature(

@@ -43,6 +43,12 @@ read. The 100 TB shape is relational end to end:
   shuffle. Overlapping matches count individually (text "a a a" matches
   phrase "a a" at anchors 1 and 2).
 
+- ``build_lexical_index`` / ``search_lexical_index`` — the same scoring
+  over persisted tf postings, sharded by a seeded token hash so a search
+  reads only its terms' shards. The index is written whole: a grown
+  corpus is re-built, and the package's one incremental-write path is
+  the snapshot log (``sources.snapshots``).
+
 Reference anchor: the reference plugin has no retrieval surface (its
 closest op is the content-list score filter,
 dataiku/dss-plugin-google-cloud-vision python-lib/
@@ -386,7 +392,8 @@ def build_lexical_index(
     explicitly-passed root paths escape Spark's hidden-path filter — an
     implementation detail that has shifted across readers. It records
     (n_shards, seed) alongside the totals so searches can refuse a
-    mismatched layout instead of silently pruning wrong shards."""
+    mismatched layout instead of silently pruning wrong shards. Both
+    tables are overwritten: the index is built whole, never appended."""
     from .selection import hashed_ngram_bucket
 
     post = _postings_with_dl(df, id_col, text_col)
@@ -408,123 +415,6 @@ def build_lexical_index(
 
 def _meta_path(index_path: str) -> str:
     return index_path.rstrip("/") + "_meta"
-
-
-def append_to_lexical_index(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    check_duplicate_ids: bool = True,
-) -> None:
-    """Incremental INGEST into a persisted lexical index (the arriving-
-    crawl path, mirroring ``similarity.append_to_ivf_index``): the new
-    documents' tf postings land in their token-hash shard directories
-    under the layout the index was BUILT with (shard hash, seed, AND
-    id column name all read from _meta — a caller cannot desync any of
-    them), and _meta's corpus totals are advanced by the increment.
-    Searches after an append are IDENTICAL to a fresh build over
-    old ∪ new (tested): tf rows are per-document, so append never needs
-    to rewrite existing postings.
-
-    ``check_duplicate_ids`` (default ON) anti-probes the increment's ids
-    against the stored index and raises if any already exist —
-    re-appended documents would silently double df_t and their own
-    scores (the (id, token)-distinct invariant ``_term_scores`` counts
-    on). The probe is a column-pruned scan of the id column; at a scale
-    where that hurts, disable it only when the ingest pipeline itself
-    guarantees exactly-once ids (e.g. an anti-join against the
-    ``sources.snapshots`` log).
-
-    Crash contract: the postings append and the _meta rewrite are two
-    non-atomic writes. A crash between them leaves the increment's
-    postings in but the totals stale — searches still see every
-    document, with slightly understated idf/avgdl. Run
-    ``repair_lexical_index_meta`` to recompute exact totals from the
-    stored postings (do NOT re-run the append: the duplicate-id guard
-    will refuse it, by design). Callers needing atomic visibility
-    should stage under ``sources.snapshots.SnapshotLog``."""
-    from .selection import hashed_ngram_bucket
-
-    spark = df.sparkSession
-    meta_old = spark.read.parquet(_meta_path(index_path)).first()
-    stored_id_col = getattr(meta_old, "id_col", id_col)
-    if stored_id_col != id_col:
-        raise ValueError(
-            f"lexical index at {index_path} stores ids in column "
-            f"'{stored_id_col}'; append called with id_col='{id_col}' — "
-            "mixed-schema parquet would silently null the appended ids"
-        )
-    if check_duplicate_ids:
-        existing = spark.read.parquet(index_path).select(id_col).distinct()
-        dup = (
-            df.select(id_col)
-            .distinct()
-            .join(existing, id_col, "left_semi")
-            .limit(5)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                "append_to_lexical_index: increment re-appends ids already "
-                f"in the index (e.g. {[r[0] for r in dup]}) — duplicates "
-                "double df_t and scores; dedup the increment first"
-            )
-    post = _postings_with_dl(df, id_col, text_col)
-    tf = post.groupBy(id_col, "dl", "token").agg(
-        F.count("*").cast("bigint").alias("tf")
-    )
-    tf.withColumn(
-        "shard", hashed_ngram_bucket(F.col("token"), meta_old.n_shards, meta_old.seed)
-    ).write.mode("append").partitionBy("shard").parquet(index_path)
-    inc = _corpus_totals(df, id_col, text_col).first()
-    _write_lexical_meta(
-        spark,
-        index_path,
-        meta_old.n_docs + inc.n_docs,
-        meta_old.total_len + inc.total_len,
-        meta_old.n_shards,
-        meta_old.seed,
-        id_col,
-    )
-
-
-def _write_lexical_meta(
-    spark, index_path: str, n_docs: int, total_len: int, n_shards: int, seed: int, id_col: str
-) -> None:
-    meta = spark.createDataFrame(
-        [(n_docs, total_len, n_shards, seed, id_col)],
-        "n_docs bigint, total_len bigint, n_shards int, seed int, id_col string",
-    )
-    meta.coalesce(1).write.mode("overwrite").parquet(_meta_path(index_path))
-
-
-def repair_lexical_index_meta(spark, index_path: str) -> None:
-    """Recompute _meta's corpus totals EXACTLY from the stored postings
-    (the recovery op for a crash between an append's postings write and
-    its meta write): every indexed document appears in the postings with
-    its dl, so distinct (id, dl) reproduces n_docs/total_len precisely.
-    One full-index scan of three columns — a recovery cost, not a
-    per-append one. Layout fields (n_shards, seed, id_col) are
-    preserved from the existing meta."""
-    meta_old = spark.read.parquet(_meta_path(index_path)).first()
-    id_col = getattr(meta_old, "id_col", "doc_id")
-    docs = (
-        spark.read.parquet(index_path).select(id_col, "dl").distinct()
-    )
-    totals = docs.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("total_len"),
-    ).first()
-    _write_lexical_meta(
-        spark,
-        index_path,
-        totals.n_docs,
-        totals.total_len,
-        meta_old.n_shards,
-        meta_old.seed,
-        id_col,
-    )
 
 
 def search_lexical_index(

@@ -16,6 +16,9 @@
   a VECTORIZED Arrow stage (``ivf_cell_udf`` — see its docstring for why
   this beats a generated flat-dot expression); search scans only the
   probed cells and ends in TakeOrderedAndProject.
+- ``build_ivf_index`` / ``search_ivf_index``: the same cells persisted
+  as hive partitions, so a search prunes unprobed cells at the scan. The
+  index is written whole with its codebook; a grown corpus is re-built.
 
 All cosine arithmetic is double-precision left-fold (deterministic IEEE
 order), and comparisons/outputs use micro-scaled integers so results hash
@@ -610,46 +613,13 @@ def build_ivf_index(
     partition directory, so a search touching ``n_probe`` cells prunes
     every other cell at the SCAN (PartitionFilters), reading
     ~n_probe/n_centroids of the bytes. Returns the trained codebook (ship
-    it to searches exactly like a real IVF codebook artifact)."""
+    it to searches exactly like a real IVF codebook artifact). The table
+    is overwritten: rebuild, with a fresh codebook, when the corpus grows."""
     centroids = train_centroids(df, n_centroids, train_iterations, id_col, vec_col)
     assign_cells(df, centroids, vec_col).write.mode("overwrite").partitionBy("cell").parquet(
         index_path
     )
     return centroids
-
-
-def append_to_ivf_index(
-    df: DataFrame,
-    index_path: str,
-    centroids: List[List[float]],
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental INGEST into a persisted IVF index: assign the new
-    vectors to the EXISTING trained cells and append them into the same
-    hive partition layout — the arriving-embeddings path of a lake ANN
-    index (real IVF indexes do exactly this between periodic retrains;
-    the codebook stays fixed so existing partitions remain valid and
-    searches see old + new vectors with identical pruning). Append is
-    partition-local: each new vector lands only in its own cell
-    directory; nothing is rewritten. Retrain (``build_ivf_index``) when
-    drift between the corpus and the frozen codebook makes cell sizes
-    unbalanced.
-
-    New rows are CAST to the stored index schema before writing — mixed
-    physical types across parquet files (e.g. float vectors in the index,
-    double vectors arriving) would otherwise poison every later scan of
-    the touched cells."""
-    assigned = assign_cells(df, centroids, vec_col)
-    stored = df.sparkSession.read.parquet(index_path).schema
-    aligned = assigned.select(
-        *[
-            (F.col(field.name) if field.name in assigned.columns else F.lit(None))
-            .cast(field.dataType)
-            .alias(field.name)
-            for field in stored.fields
-        ]
-    )
-    aligned.write.mode("append").partitionBy("cell").parquet(index_path)
 
 
 def search_ivf_index(

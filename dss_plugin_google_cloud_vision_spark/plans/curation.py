@@ -31,7 +31,6 @@ def curate_corpus(
     pages: DataFrame,
     min_tokens: int = DEFAULT_MIN_TOKENS,
     near_dup_threshold_milli: int = 800,
-    materialize_intermediate: bool = True,
 ) -> DataFrame:
     """pages(url, html, ..., doc_id, lang) → curated documents
     (doc_id, lang, text, n_tokens): extraction failures dropped, short
@@ -39,10 +38,10 @@ def curate_corpus(
     clusters collapsed to their min-id representative.
 
     The exact-deduped intermediate feeds BOTH the pair graph and the final
-    anti-join; ``materialize_intermediate`` (default) checkpoints it once
-    so the extraction stage is not recomputed per consumer — at cluster
-    scale you would persist this intermediate to the snapshot log and get
-    the same effect plus resumability."""
+    anti-join; it is checkpointed once so the extraction stage is not
+    recomputed per consumer — at cluster scale you would persist this
+    intermediate to the snapshot log and get the same effect plus
+    resumability."""
     plan = run_extraction_pipeline(pages)
     extracted = plan.pages.filter(F.col("content_api_error_message") == "").select(
         "doc_id",
@@ -52,14 +51,13 @@ def curate_corpus(
     gated = extracted.withColumn("n_tokens", F.size(F.split("text", " "))).filter(
         F.col("n_tokens") >= min_tokens
     )
-    if materialize_intermediate:
-        # exact_dedup_keep_first consumes its input twice (keeper
-        # election + semi-join probe) — without this the whole
-        # extraction stage executes twice (r6)
-        gated = gated.localCheckpoint(eager=False)
-    exact = exact_dedup_keep_first(gated, id_col="doc_id", text_col="text")
-    if materialize_intermediate:
-        exact = exact.localCheckpoint(eager=False)
+    # exact_dedup_keep_first consumes its input twice (keeper
+    # election + semi-join probe) — without this the whole
+    # extraction stage executes twice (r6)
+    gated = gated.localCheckpoint(eager=False)
+    exact = exact_dedup_keep_first(gated, id_col="doc_id", text_col="text").localCheckpoint(
+        eager=False
+    )
     pairs = near_dup_pairs(
         exact, id_col="doc_id", text_col="text", threshold_milli=near_dup_threshold_milli
     ).select("doc_a", "doc_b")

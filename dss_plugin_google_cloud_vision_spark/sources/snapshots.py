@@ -54,8 +54,8 @@ DATA_DIR = "data"
 _MANIFEST_NAME = re.compile(r"^\d{8}\.json$")
 
 LINEAGE_DDL = (
-    "run_id string, partition_id int, n_input bigint, n_output bigint, "
-    "n_success bigint, n_error bigint, elapsed_ms bigint"
+    "run_id string, partition_id int, n_output bigint, n_success bigint, "
+    "n_error bigint, elapsed_ms bigint"
 )
 
 
@@ -270,7 +270,6 @@ def with_lineage(
         row = {
             "run_id": run_id,
             "partition_id": partition_id,
-            "n_input": n_output,  # page rows seen by this wrapper
             "n_output": n_output,
             "n_success": n_success,
             "n_error": n_output - n_success,

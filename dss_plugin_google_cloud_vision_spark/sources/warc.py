@@ -46,9 +46,6 @@ from pyspark.sql.types import (
 WARC_MAGIC = "WARC/1.0\r\n"
 # record = MAGIC + "WARC-Record-ID: {id}\r\nContent-Length: {n}\r\n\r\n"
 #          + payload + "\r\n\r\n"
-_HEADER_FIXED_CHARS = len(WARC_MAGIC) + len("WARC-Record-ID: \r\n") + len(
-    "Content-Length: \r\n\r\n"
-)
 _TRAILER_CHARS = 4  # \r\n\r\n
 
 

@@ -92,49 +92,68 @@ def test_quality_and_langid_basics(spark):
     assert langs[2] == ""
 
 
-def test_incremental_exact_dedup_across_runs(spark, tmp_path):
-    from dss_plugin_google_cloud_vision_spark.operators.dedup import incremental_exact_dedup
+def _dedup_increment(spark, log, increment):
+    """Cross-run exact dedup over the snapshot log: anti-join the
+    increment's text fingerprints against the committed ``_fp`` column,
+    keep-first (min id) within the increment, commit atomically."""
+    from dss_plugin_google_cloud_vision_spark.sources.snapshots import run_with_snapshot_resume
 
-    out = str(tmp_path / "corpus")
+    return run_with_snapshot_resume(
+        spark,
+        increment.withColumn("_fp", F.md5("text")),
+        lambda todo: exact_dedup_keep_first(todo, "doc_id", "text"),
+        log,
+        key="_fp",
+    )
+
+
+def test_incremental_exact_dedup_across_runs(spark, tmp_path):
+    from dss_plugin_google_cloud_vision_spark.sources.snapshots import SnapshotLog
+
+    log = SnapshotLog(str(tmp_path / "corpus"))
     inc1 = spark.createDataFrame(
         [(1, "alpha text one"), (2, "beta text two"), (3, "alpha text one")],
         "doc_id int, text string",
     )
-    n1 = incremental_exact_dedup(spark, inc1, out, return_corpus_size=True)
-    assert n1 == 2  # in-increment duplicate dropped, keeper = min id
+    # in-increment duplicate dropped, keeper = min id
+    assert _dedup_increment(spark, log, inc1)["snapshot_rows"] == 2
 
     # increment 2: one cross-run duplicate, one new, one in-increment dup
     inc2 = spark.createDataFrame(
         [(10, "beta text two"), (11, "gamma text three"), (12, "gamma text three")],
         "doc_id int, text string",
     )
-    n2 = incremental_exact_dedup(spark, inc2, out, return_corpus_size=True)
-    assert n2 == 3
-    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
+    assert _dedup_increment(spark, log, inc2)["snapshot_rows"] == 3
+    kept = {r["doc_id"] for r in log.read(spark).collect()}
     assert kept == {1, 2, 11}
 
-    # re-ingesting increment 2 is a no-op; the default return is None
-    # (no full-corpus count per increment — opt-in only)
-    assert incremental_exact_dedup(spark, inc2, out) is None
-    assert spark.read.parquet(out).count() == 3
+    # re-ingesting increment 2 is a no-op
+    again = _dedup_increment(spark, log, inc2)
+    assert again["snapshot_rows"] == again["snapshot_keys"] == 3
+    assert log.read(spark).count() == 3
 
 
 def test_incremental_exact_dedup_corrupt_corpus_raises(spark, tmp_path):
-    """A corpus path that EXISTS but cannot be read must raise, never be
-    silently treated as 'first increment' (that would skip the anti-join
-    and re-admit duplicates); only a genuinely missing path means first
-    increment."""
-    from dss_plugin_google_cloud_vision_spark.operators.dedup import incremental_exact_dedup
+    """A committed data file that cannot be read must raise, never be
+    skipped (that would drop fingerprints from the anti-join and re-admit
+    duplicates), and the failed increment publishes no snapshot."""
+    from dss_plugin_google_cloud_vision_spark.sources.snapshots import SnapshotLog
 
-    corrupt = tmp_path / "corpus"
-    corrupt.mkdir()
-    (corrupt / "part-00000.parquet").write_bytes(b"not a parquet footer")
-    inc = spark.createDataFrame([(1, "alpha")], "doc_id int, text string")
+    log = SnapshotLog(str(tmp_path / "corpus"))
+    _dedup_increment(
+        spark, log, spark.createDataFrame([(1, "alpha")], "doc_id int, text string")
+    )
+    committed = sorted((tmp_path / "corpus" / "data").glob("*/part-*.parquet"))
+    assert committed
+    for part in committed:
+        part.write_bytes(b"not a parquet footer")
+    before = log.snapshot_ids()
+    inc = spark.createDataFrame([(2, "beta")], "doc_id int, text string")
     with pytest.raises(Exception) as excinfo:
-        incremental_exact_dedup(spark, inc, str(corrupt))
-    # the failure surfaces the real read error, and nothing was appended
+        _dedup_increment(spark, log, inc)
+    # the failure surfaces the real read error, and nothing was published
     assert "parquet" in str(excinfo.value).lower() or "footer" in str(excinfo.value).lower()
-    assert list(corrupt.iterdir()) == [corrupt / "part-00000.parquet"]
+    assert log.snapshot_ids() == before
 
 
 def test_near_dup_clusters_chain(spark):
@@ -943,37 +962,6 @@ def test_pack_sequences_randomized_invariants(spark):
             for r in pack_sequences(df, budget_tokens=budget, group_size=gs).collect()
         }
         assert again == expected
-
-
-def test_ivf_index_incremental_append(spark, sf_dir, tmp_path):
-    """Appending vectors into a persisted IVF index (frozen codebook) is
-    partition-local and searches see old + new vectors: a planted
-    near-duplicate of the query appended AFTER the build must surface at
-    rank 2 (the query itself stays rank 1), and pre-existing results are
-    unchanged otherwise."""
-    from dss_plugin_google_cloud_vision_spark.operators.similarity import (
-        append_to_ivf_index,
-        build_ivf_index,
-        search_ivf_index,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    query = [float(v) for v in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    index_path = str(tmp_path / "ivf")
-    centroids = build_ivf_index(emb, index_path, n_centroids=8, train_iterations=2)
-    before = search_ivf_index(spark, index_path, centroids, query, k=5, n_probe=3).collect()
-    assert before[0]["vec_id"] == 0 and before[0]["cos_micro"] == 1_000_000
-
-    # plant an almost-identical vector (id 999999) and append it
-    near = [v * 0.999 for v in query]
-    new = spark.createDataFrame([(999999, near)], "vec_id bigint, embedding array<double>")
-    append_to_ivf_index(new, index_path, centroids)
-
-    after = search_ivf_index(spark, index_path, centroids, query, k=5, n_probe=3).collect()
-    assert after[0]["vec_id"] == 0
-    assert after[1]["vec_id"] == 999999 and after[1]["cos_micro"] >= 999_000
-    # pre-existing ranking below the insert is preserved
-    assert [r["vec_id"] for r in after[2:]] == [r["vec_id"] for r in before[1:4]]
 
 
 def test_pq_ann_recall_and_determinism(spark, sf_dir):

@@ -1,6 +1,9 @@
 # -*- coding: utf-8 -*-
 """Checkpoint-resume (FIXTURES.md §5) and skew-salting tests."""
 
+import json
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from dss_plugin_google_cloud_vision_spark.operators.pages import extract_pages
@@ -72,6 +75,11 @@ def test_resume_completes_partial_run(spark, tmp_path):
     errors_expected = clean.filter(F.col("content_api_response") == "").count()
     assert totals["errors"] == errors_expected
     assert lineage.select("run_id").distinct().count() == 2
+    # every written row carries exactly the DDL's fields (schema-on-read
+    # would null a missing key and drop an extra one without a word)
+    ddl_fields = [field.split()[0] for field in LINEAGE_DDL.split(",")]
+    rows = [json.loads(path.read_text()) for path in sorted(Path(lineage_dir).glob("*.json"))]
+    assert rows and all(list(row) == ddl_fields for row in rows)
 
 
 def test_salting_spreads_hot_host(spark):

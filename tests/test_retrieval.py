@@ -292,43 +292,6 @@ def test_bm25_random_corpus_parity(spark):
     assert got == expected
 
 
-def test_append_to_lexical_index_equals_fresh_build(docs, tmp_path):
-    """build(half A) + append(half B) must answer every query exactly
-    like build(A ∪ B): same tf rows, same advanced totals, same scores
-    and ranks."""
-    from dss_plugin_google_cloud_vision_spark.operators.retrieval import (
-        append_to_lexical_index,
-        build_lexical_index,
-        search_lexical_index,
-    )
-
-    spark = docs.sparkSession
-    half_a = docs.filter(F.col("doc_id") <= 2)
-    half_b = docs.filter(F.col("doc_id") > 2)
-    inc_path = str(tmp_path / "inc_index")
-    full_path = str(tmp_path / "full_index")
-    build_lexical_index(half_a, inc_path)
-    append_to_lexical_index(half_b, inc_path)
-    build_lexical_index(docs, full_path)
-    for terms in (["spark", "merge", "join"], ["a"], ["the", "dog"]):
-        inc = [
-            (r.doc_id, r.score_micro, r.n_terms_matched, r.rank)
-            for r in search_lexical_index(spark, inc_path, terms, k=10)
-            .orderBy("rank")
-            .collect()
-        ]
-        full = [
-            (r.doc_id, r.score_micro, r.n_terms_matched, r.rank)
-            for r in search_lexical_index(spark, full_path, terms, k=10)
-            .orderBy("rank")
-            .collect()
-        ]
-        assert inc == full and len(inc) > 0
-    # totals advanced exactly
-    meta = spark.read.parquet(inc_path + "_meta").first()
-    assert meta.n_docs == docs.count()
-
-
 def test_multi_query_bm25_matches_single_query(docs):
     """A batch of queries returns, for each query_id, exactly the rows
     bm25_topk returns for that query alone; empty batches raise."""
@@ -352,61 +315,6 @@ def test_multi_query_bm25_matches_single_query(docs):
         multi_query_bm25(docs, {})
     with pytest.raises(ValueError):
         multi_query_bm25(docs, {"q": []})
-
-
-def test_append_guards_and_repair(docs, tmp_path):
-    """Re-appending existing ids must refuse (duplicates double df_t);
-    a mismatched id_col must refuse (mixed-schema parquet); and
-    repair_lexical_index_meta reconstructs exact totals from postings
-    (the crash-between-writes recovery)."""
-    from dss_plugin_google_cloud_vision_spark.operators.retrieval import (
-        append_to_lexical_index,
-        build_lexical_index,
-        repair_lexical_index_meta,
-        search_lexical_index,
-    )
-
-    spark = docs.sparkSession
-    path = str(tmp_path / "guarded_index")
-    build_lexical_index(docs.filter(F.col("doc_id") <= 3), path)
-    with pytest.raises(ValueError, match="re-appends ids"):
-        append_to_lexical_index(docs.filter(F.col("doc_id") == 2), path)
-    with pytest.raises(ValueError, match="stores ids in column"):
-        append_to_lexical_index(
-            docs.filter(F.col("doc_id") > 3).withColumnRenamed("doc_id", "page_id"),
-            path,
-            id_col="page_id",
-        )
-    # simulate the crash: postings appended, meta write lost — do the
-    # postings append manually, then repair
-    from dss_plugin_google_cloud_vision_spark.operators.retrieval import (
-        _postings_with_dl,
-    )
-    from dss_plugin_google_cloud_vision_spark.operators.selection import (
-        hashed_ngram_bucket,
-    )
-
-    inc = docs.filter(F.col("doc_id") > 3)
-    tf = (
-        _postings_with_dl(inc, "doc_id", "text")
-        .groupBy("doc_id", "dl", "token")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-    )
-    tf.withColumn("shard", hashed_ngram_bucket(F.col("token"), 16, 29)).write.mode(
-        "append"
-    ).partitionBy("shard").parquet(path)
-    stale = spark.read.parquet(path + "_meta").first()
-    assert stale.n_docs == 3  # meta is stale after the simulated crash
-    repair_lexical_index_meta(spark, path)
-    fixed = spark.read.parquet(path + "_meta").first()
-    assert fixed.n_docs == docs.count()
-    # and post-repair searches equal a fresh full build
-    full = str(tmp_path / "full_after_repair")
-    build_lexical_index(docs, full)
-    terms = ["spark", "merge", "join"]
-    a = [(r.doc_id, r.score_micro, r.rank) for r in search_lexical_index(spark, path, terms, k=10).orderBy("rank").collect()]
-    b = [(r.doc_id, r.score_micro, r.rank) for r in search_lexical_index(spark, full, terms, k=10).orderBy("rank").collect()]
-    assert a == b
 
 
 def test_multi_query_empty_term_list_raises(docs):

@@ -1,8 +1,12 @@
 #!/usr/bin/env python
 # -*- coding: utf-8 -*-
-"""Generate PLANS.md: formatted physical plans of the headline operators
-with scale commentary — the 'is this the plan you'd want at 100 TB'
-evidence, regenerated after operator changes."""
+"""Regenerate PLANS.md's headline sections: formatted physical plans of
+the headline operators with scale commentary — the 'is this the plan
+you'd want at 100 TB' evidence, regenerated after operator changes.
+
+Only the ``## <title>`` sections this script generates are replaced
+(matched by heading); every hand-written line of PLANS.md is kept
+byte-identical. Run: ``python tools/dump_plans.py``."""
 
 from __future__ import annotations
 
@@ -18,6 +22,25 @@ def formatted(df) -> str:
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
+
+
+def splice_sections(text: str, sections) -> str:
+    """``text`` with each generated section's body replaced: a section runs
+    from its ``## <title>`` line to the next ``## `` heading outside a code
+    fence. A title not yet in ``text`` is appended at the end."""
+    chunks, fenced = [[]], False
+    for line in text.splitlines(keepends=True):
+        if line.startswith("```"):
+            fenced = not fenced
+        if not fenced and line.startswith("## "):
+            chunks.append([])
+        chunks[-1].append(line)
+    fresh = {
+        f"## {title}\n": f"## {title}\n\n{commentary}\n\n```\n{plan_text.strip()}\n```\n\n"
+        for title, commentary, plan_text in sections
+    }
+    out = [fresh.pop(chunk[0], None) or "".join(chunk) for chunk in chunks if chunk]
+    return "".join(out) + "".join(fresh.values())
 
 
 def main() -> None:
@@ -98,16 +121,12 @@ def main() -> None:
         )
     )
 
-    out = ["# PLANS — physical plans of the headline operators\n"]
-    out.append(
-        "Generated by `python tools/dump_plans.py` (local[8], synthetic pages"
-        " at /tmp). Re-generate after operator changes.\n"
-    )
-    for title, commentary, plan_text in sections:
-        out.append(f"## {title}\n\n{commentary}\n\n```\n{plan_text.strip()}\n```\n")
-    with open(os.path.join(REPO_ROOT, "PLANS.md"), "w") as handle:
-        handle.write("\n".join(out))
-    print("wrote PLANS.md")
+    plans_md = os.path.join(REPO_ROOT, "PLANS.md")
+    with open(plans_md) as handle:
+        text = handle.read()
+    with open(plans_md, "w") as handle:
+        handle.write(splice_sections(text, sections))
+    print("updated PLANS.md")
 
 
 if __name__ == "__main__":
