@@ -176,32 +176,6 @@ def q_doc_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "page_count", "doc_text")
 
 
-def q_extract_pdf_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PDF-path byte-identity: two-page layout payloads with blocks written
-    out of reading order; the pipeline must split pages, restore layout
-    order and merge back to part1\\npart2\\fpart3 of documents.text."""
-    from dss_plugin_google_cloud_vision_spark.sources.render import documents_as_pdf_pages
-
-    pages = documents_as_pdf_pages(_table(spark, sf_dir, "documents"))
-    plan = run_extraction_pipeline(pages)
-    return plan.documents.join(pages.select("url", "doc_id"), "url").select(
-        "doc_id", "page_count", F.col("doc_text").alias("extracted_text")
-    )
-
-
-def q_extract_tiff_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIFF-path byte-identity (the third routing branch): two-frame
-    ``II*\\x00`` payloads; the pipeline must split frames, extract each and
-    merge back to half1\\fhalf2 of documents.text."""
-    from dss_plugin_google_cloud_vision_spark.sources.render import documents_as_tiff_pages
-
-    pages = documents_as_tiff_pages(_table(spark, sf_dir, "documents"))
-    plan = run_extraction_pipeline(pages)
-    return plan.documents.join(pages.select("url", "doc_id"), "url").select(
-        "doc_id", "page_count", F.col("doc_text").alias("extracted_text")
-    )
-
-
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 top-k: top 3 lineitems per returnflag by price, deterministic
     tie-break."""
@@ -507,72 +481,6 @@ def q_span_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LIKELIHOODS = ("VERY_UNLIKELY", "UNLIKELY", "POSSIBLE", "LIKELY", "VERY_LIKELY")
-
-
-def q_unsafe_likelihoods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P7 through the actual formatter: build safeSearchAnnotation
-    responses in SQL, project the five likelihood columns back out
-    (reference google_vision_api_formatting.py:432-457)."""
-    from dss_plugin_google_cloud_vision_spark.operators.formatters import (
-        UNSAFE_CATEGORIES,
-        format_unsafe_content,
-    )
-
-    docs = _table(spark, sf_dir, "documents")
-
-    def lik(offset: int):
-        return F.element_at(
-            F.array(*[F.lit(s) for s in _LIKELIHOODS]),
-            ((F.col("doc_id") + offset) % 5 + 1).cast("int"),
-        )
-
-    response = F.to_json(
-        F.struct(
-            F.struct(
-                *[lik(i).alias(cat) for i, cat in enumerate(UNSAFE_CATEGORIES)]
-            ).alias("safeSearchAnnotation")
-        )
-    )
-    with_resp = docs.select("doc_id", response.alias("resp"))
-    result = format_unsafe_content(with_resp, "resp", "moderation_api")
-    return result.df.select(
-        "doc_id",
-        *[
-            F.col(f"moderation_api_{cat}_likelihood").alias(f"{cat}_likelihood")
-            for cat in UNSAFE_CATEGORIES
-        ],
-    )
-
-
-def q_crop_hints_formatter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P8 through the actual formatter: first crop hint's confidence /
-    importanceFraction (reference google_vision_api_formatting.py:460-486),
-    emitted as exact micro ints."""
-    from dss_plugin_google_cloud_vision_spark.operators.formatters import format_crop_hints
-
-    docs = _table(spark, sf_dir, "documents")
-    conf = (F.col("doc_id") % 100).cast("double") / 100.0
-    imp = (F.col("doc_id") % 37).cast("double") / 37.0
-    response = F.to_json(
-        F.struct(
-            F.struct(
-                F.array(
-                    F.struct(conf.alias("confidence"), imp.alias("importanceFraction")),
-                    # a second hint that must NOT win (first-hint semantics)
-                    F.struct(F.lit(0.5).alias("confidence"), F.lit(0.5).alias("importanceFraction")),
-                ).alias("cropHints")
-            ).alias("cropHintsAnnotation")
-        )
-    )
-    with_resp = docs.select("doc_id", response.alias("resp"))
-    result = format_crop_hints(with_resp, "resp", "crop_api")
-    return result.df.select(
-        "doc_id",
-        F.round(F.col("crop_api_score") * 1_000_000).cast("bigint").alias("score_micro"),
-        F.round(F.col("crop_api_importance_fraction") * 1_000_000)
-        .cast("bigint")
-        .alias("importance_micro"),
-    )
 
 
 def q_web_blocklist_formatter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1417,76 +1325,97 @@ def q_split_empty_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Training-data hygiene pass: URLs/emails/phones planted into every
-    document (deterministically, mirrored by the oracle) must be counted
-    and redacted by typed placeholders — pure JVM regexp, exact oracle."""
-    from dss_plugin_google_cloud_vision_spark.operators.textstats import (
-        pii_counts,
-        redact_pii_column,
+def q_extract_split_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both document-split branches (P3/M7/E1/E2) in ONE query, union'd
+    with a ``fmt`` discriminator. PDF: two-page layout payloads with blocks
+    written out of reading order; the pipeline must split pages, restore
+    layout order and merge back to part1\\npart2\\fpart3 of documents.text.
+    TIFF (the third routing branch): two-frame ``II*\\x00`` payloads that
+    must merge back to half1\\fhalf2 of documents.text."""
+    from dss_plugin_google_cloud_vision_spark.sources.render import (
+        documents_as_pdf_pages,
+        documents_as_tiff_pages,
     )
 
     docs = _table(spark, sf_dir, "documents")
-    planted = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com via https://site"),
-            F.col("doc_id").cast("string"),
-            F.lit(".org/p?q=1 or +1 (555) 010-"),
-            F.format_string("%04d", (F.col("doc_id") % 10000).cast("int")),
-        ).alias("text"),
-    )
-    counts = pii_counts()
-    return planted.select(
-        "doc_id",
-        redact_pii_column().alias("redacted"),
-        *[expr.alias(name) for name, expr in counts.items()],
-    )
-
-
-def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition signal (top-bigram fraction) over documents
-    with a planted spam tail on every fifth doc — the quality rule that
-    gates boilerplate/spam out of a training corpus."""
-    from dss_plugin_google_cloud_vision_spark.operators.textstats import repetition_table
-
-    docs = _table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.col("text"), F.lit(" spam spam spam spam spam spam")),
+    parts = []
+    for fmt, render in (("pdf", documents_as_pdf_pages), ("tiff", documents_as_tiff_pages)):
+        pages = render(docs)
+        plan = run_extraction_pipeline(pages)
+        parts.append(
+            plan.documents.join(pages.select("url", "doc_id"), "url").select(
+                F.lit(fmt).alias("fmt"),
+                "doc_id",
+                "page_count",
+                F.col("doc_text").alias("extracted_text"),
+            )
         )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    return repetition_table(docs)
-
-
-def q_extract_split_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both document-split branches (P3/M7/E1/E2) in ONE query: the PDF and
-    TIFF identity roundtrips union'd with a ``fmt`` discriminator — keeps
-    both format branches inside the driver's correctness window without two
-    dict slots."""
-    pdf = q_extract_pdf_identity(spark, sf_dir)
-    tiff = q_extract_tiff_identity(spark, sf_dir)
-    return pdf.select(F.lit("pdf").alias("fmt"), "*").unionByName(
-        tiff.select(F.lit("tiff").alias("fmt"), "*")
-    )
+    return parts[0].unionByName(parts[1])
 
 
 def q_vision_formatters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P7+P8+P4 in ONE query: the unsafe-likelihood, crop-hint, and
     web-blocklist formatters are all 1:1 per-doc projections — joined on
-    doc_id into a single wide correctness surface (each side still runs
-    through its real formatter)."""
-    return (
-        q_unsafe_likelihoods(spark, sf_dir)
-        .join(q_crop_hints_formatter(spark, sf_dir), "doc_id")
-        .join(q_web_blocklist_formatter(spark, sf_dir), "doc_id")
+    doc_id into a single wide correctness surface, each through its real
+    formatter.
+
+    P7: safeSearchAnnotation responses built in SQL, the five likelihood
+    columns projected back out (reference google_vision_api_formatting.py:
+    432-457). P8: the first crop hint's confidence / importanceFraction
+    (reference :460-486) as exact micro ints; a second hint must not win."""
+    from dss_plugin_google_cloud_vision_spark.operators.formatters import (
+        UNSAFE_CATEGORIES,
+        format_crop_hints,
+        format_unsafe_content,
     )
+
+    docs = _table(spark, sf_dir, "documents")
+
+    def lik(offset: int):
+        return F.element_at(
+            F.array(*[F.lit(s) for s in _LIKELIHOODS]),
+            ((F.col("doc_id") + offset) % 5 + 1).cast("int"),
+        )
+
+    safe_search = F.to_json(
+        F.struct(
+            F.struct(
+                *[lik(i).alias(cat) for i, cat in enumerate(UNSAFE_CATEGORIES)]
+            ).alias("safeSearchAnnotation")
+        )
+    )
+    unsafe = format_unsafe_content(
+        docs.select("doc_id", safe_search.alias("resp")), "resp", "moderation_api"
+    ).df.select(
+        "doc_id",
+        *[
+            F.col(f"moderation_api_{cat}_likelihood").alias(f"{cat}_likelihood")
+            for cat in UNSAFE_CATEGORIES
+        ],
+    )
+
+    conf = (F.col("doc_id") % 100).cast("double") / 100.0
+    imp = (F.col("doc_id") % 37).cast("double") / 37.0
+    crop_hints = F.to_json(
+        F.struct(
+            F.struct(
+                F.array(
+                    F.struct(conf.alias("confidence"), imp.alias("importanceFraction")),
+                    F.struct(F.lit(0.5).alias("confidence"), F.lit(0.5).alias("importanceFraction")),
+                ).alias("cropHints")
+            ).alias("cropHintsAnnotation")
+        )
+    )
+    crop = format_crop_hints(
+        docs.select("doc_id", crop_hints.alias("resp")), "resp", "crop_api"
+    ).df.select(
+        "doc_id",
+        F.round(F.col("crop_api_score") * 1_000_000).cast("bigint").alias("score_micro"),
+        F.round(F.col("crop_api_importance_fraction") * 1_000_000)
+        .cast("bigint")
+        .alias("importance_micro"),
+    )
+    return unsafe.join(crop, "doc_id").join(q_web_blocklist_formatter(spark, sf_dir), "doc_id")
 
 
 def q_corpus_subsample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1620,9 +1549,46 @@ def q_text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_doc_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction + repetition signal as ONE per-doc surface (both keyed
-    1:1 on doc_id; each runs its own planted corpus exactly as before)."""
-    return q_pii_redaction(spark, sf_dir).join(q_repetition_stats(spark, sf_dir), "doc_id")
+    """Two training-data hygiene signals as ONE per-doc surface, joined
+    1:1 on doc_id, each over its own planted corpus. PII: URLs/emails/
+    phones planted into every document (deterministically, mirrored by the
+    oracle) must be counted and redacted by typed placeholders — pure JVM
+    regexp. Repetition: the Gopher-style top-bigram fraction over
+    documents with a planted spam tail on every fifth doc."""
+    from dss_plugin_google_cloud_vision_spark.operators.textstats import (
+        pii_counts,
+        redact_pii_column,
+        repetition_table,
+    )
+
+    docs = _table(spark, sf_dir, "documents")
+    planted = docs.select(
+        "doc_id",
+        F.concat(
+            F.col("text"),
+            F.lit(" contact user"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com via https://site"),
+            F.col("doc_id").cast("string"),
+            F.lit(".org/p?q=1 or +1 (555) 010-"),
+            F.format_string("%04d", (F.col("doc_id") % 10000).cast("int")),
+        ).alias("text"),
+    )
+    pii = planted.select(
+        "doc_id",
+        redact_pii_column().alias("redacted"),
+        *[expr.alias(name) for name, expr in pii_counts().items()],
+    )
+    spam_tailed = docs.select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % 5 == 0,
+            F.concat(F.col("text"), F.lit(" spam spam spam spam spam spam")),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return pii.join(repetition_table(spam_tailed), "doc_id")
 
 
 def q_column_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,8 +20,8 @@ batched, vectorized extraction inside ``mapInArrow`` stages:
   multi-page payload parsing (three-way magic-byte routing: pdf / tiff /
   html, the reference's suffix routing).
 - ``operators.formatters`` — the five response-formatter projections as
-  Spark column-expression builders (incl. an opt-in replica of the
-  reference's content-list sort bug).
+  Spark column-expression builders (content lists take the reference's
+  intended filter+sort, not its precedence bug).
 - ``operators.artifacts`` — S6 span-overlay artifact column + executor-side
   blob sink.
 - ``sources.snapshots`` — checkpoint-resume: an Iceberg-analogue

@@ -13,8 +13,8 @@ specification (the 'vids'/'DIB ' uncompressed form):
 - ``LIST('movi')`` with one ``00db`` chunk per frame — bottom-up rows,
   BGR pixel order, rows padded to 4 bytes (DIB rules);
 - ``idx1`` index (offsets relative to the start of the ``movi`` list
-  data, per the spec) — written on encode, used by the frame sampler to
-  seek without decoding.
+  data, per the spec) — written on encode; the decoder walks the ``movi``
+  chunks instead.
 
 A production deployment swaps this for ffmpeg/PyAV behind the same
 functions. Everything here is a pure function of the input bytes.
@@ -177,8 +177,7 @@ def _parse_headers(data: bytes) -> Tuple[int, int, int, int, int]:
 
 def avi_frame_offsets(data: bytes) -> Tuple[List[Tuple[int, int]], int, int, int]:
     """→ ([(absolute_offset, size) per frame chunk body], width, height,
-    fps) — an index walk over the ``movi`` list; no pixel decode. This is
-    what a real frame sampler does: seek to the sampled frames only."""
+    fps) — an index walk over the ``movi`` list; no pixel decode."""
     width, height, fps, _total, (mstart, mend) = _parse_headers(data)
     offsets = [
         (body, size)

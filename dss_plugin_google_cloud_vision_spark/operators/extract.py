@@ -14,8 +14,8 @@ Public surface:
 
 - ``extract(df, function, exceptions, column_prefix, ...)`` — drop-in
   semantic equivalent of ``parallelizer(input_df, function, ...)``
-  (reference: python-lib/parallelizer.py:160-204): same kwargs, same output
-  columns, but distributed and lazy.
+  (reference: python-lib/parallelizer.py:160-204): same kwargs except
+  ``parallel_workers``, same output columns, but distributed and lazy.
 - ``guarded_row_map`` / ``guarded_batch_map`` — the per-element kernels
   (reference: python-lib/parallelizer.py:41-79 and :82-124).
 - ``aligned_batch_response_parser`` — default batch parser with the
@@ -36,7 +36,7 @@ from __future__ import annotations
 import json
 import logging
 import reprlib
-from typing import Callable, Dict, Iterable, Iterator, List, NamedTuple, Optional, Sequence, Tuple, Union
+from typing import Callable, Dict, Iterable, Iterator, List, NamedTuple, Optional, Tuple, Union
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -165,13 +165,11 @@ def extract(
     function: Callable,
     exceptions: ExceptionSpec,
     column_prefix: str,
-    parallel_workers: Optional[int] = None,  # accepted for drop-in parity; Spark schedules
     batch_support: bool = DEFAULT_BATCH_SUPPORT,
     batch_size: int = DEFAULT_BATCH_SIZE,
     error_handling: ErrorHandling = ErrorHandling.LOG,
     verbose: bool = DEFAULT_VERBOSE,
     batch_response_parser: Optional[Callable] = None,
-    input_columns: Optional[Sequence[str]] = None,
     **function_kwargs,
 ) -> DataFrame:
     """Distributed equivalent of the reference ``parallelizer``
@@ -186,22 +184,13 @@ def extract(
     ``error_raw`` only under ``verbose``; all error columns dropped under
     ``ErrorHandling.FAIL`` (where any error aborts the job instead).
 
-    ``parallel_workers`` from the reference is intentionally absent:
-    parallelism is Spark's task scheduling (one partition = one task).
-
-    ``input_columns`` (engine extension): when the function declares which
-    columns it reads, only those are materialized from Arrow into Python
-    row-dicts — the passthrough columns stay as Arrow arrays end-to-end.
-    On wide tables (or tables carrying binary payloads the function doesn't
-    touch) this cuts the Arrow→Python traffic to the declared subset; the
-    function sees partial row-dicts, same as a narrowed reference input df.
+    The reference's ``parallel_workers`` has no counterpart: parallelism
+    is Spark's task scheduling (one partition = one task). Every input
+    column crosses into the row-dicts; narrow ``df`` first to keep a wide
+    or binary column out of Python.
     """
     if batch_size < 1:
         raise ValueError(f"batch_size must be >= 1, got {batch_size}")
-    if input_columns is not None:
-        missing = [c for c in input_columns if c not in df.columns]
-        if missing:
-            raise ValueError(f"input_columns not in DataFrame: {missing}")
     column_names = build_unique_column_names(df.columns, column_prefix)
     out_cols = api_output_columns(column_names, error_handling, verbose)
     out_schema = StructType(
@@ -215,14 +204,7 @@ def extract(
 
     def process(record_batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in record_batches:
-            if input_columns is None:
-                rows = rb.to_pylist()
-            else:
-                columns = {name: rb.column(rb.schema.names.index(name)).to_pylist() for name in input_columns}
-                rows = [
-                    {name: columns[name][i] for name in input_columns}
-                    for i in range(rb.num_rows)
-                ]
+            rows = rb.to_pylist()
             if batch_support:
                 results: List[Dict] = []
                 for start in range(0, len(rows), batch_size):

@@ -21,8 +21,7 @@ Semantics reproduced exactly (and deviations documented):
   ``max_results``. NOTE the reference has an operator-precedence bug — it
   filters/sorts only when ``score_key`` is *falsy* (:131-136), i.e. scored
   categories are returned unfiltered and unsorted; we implement the
-  *intended* behavior by default and replicate the bug verbatim under
-  ``bug_compatible=True`` (see ``_stable_top_names``).
+  *intended* behavior (see ``_stable_top_names``).
 - **Empty sentinel deviation**: the reference stores ``""`` for an empty
   list and a Python list otherwise (mixed-type pandas column); Spark
   columns are uniformly ``array<string>`` — empty list instead of ``""``
@@ -98,7 +97,6 @@ def _stable_top_names(
     name_field: str,
     minimum_score: float,
     max_results: int,
-    bug_compatible: bool = False,
 ) -> Column:
     """filter(score>=min) → stable sort score-desc → truthy names → cap.
 
@@ -106,23 +104,12 @@ def _stable_top_names(
     equal scores keep input order — reproduced by sorting (−score, index)
     structs lexicographically.
 
-    ``bug_compatible=True`` reproduces the reference's operator-precedence
-    bug VERBATIM (google_vision_api_formatting.py:131-136 applies the
-    filter+sort only when ``score_key`` is falsy): scored categories come
-    back in raw response order with NO min-score filter; unscored
-    categories "sort" by a None key (constant 0, stable → no-op) and are
-    dropped entirely when ``minimum_score > 0`` (0 >= min fails). Default
-    is the intended behavior.
+    NOTE the reference applies the filter+sort only when ``score_key`` is
+    falsy (google_vision_api_formatting.py:131-136, an operator-precedence
+    bug): there, scored categories come back in raw response order with no
+    min-score filter. This is the intended behavior instead.
     """
     items = F.coalesce(items, F.array())
-    if bug_compatible:
-        if score_field is None and minimum_score > 0.0:
-            # the None-key filter branch: 0 >= minimum_score fails for all
-            ordered = F.array().cast("array<string>")
-        else:
-            ordered = F.transform(items, lambda x: x[name_field])
-        truthy = F.filter(ordered, lambda name: name.isNotNull() & (name != F.lit("")))
-        return F.slice(truthy, 1, max_results)
     if score_field is not None:
         filtered = F.filter(
             items, lambda x: F.coalesce(x[score_field], F.lit(0.0)) >= F.lit(float(minimum_score))
@@ -215,12 +202,8 @@ def format_content_detection(
     content_categories: Sequence[str] = ("label", "object", "landmark", "logo", "web"),
     minimum_score: float = 0.0,
     max_results: int = 10,
-    bug_compatible: bool = False,
 ) -> FormatterResult:
-    """Top-k content lists per category + web-detection family.
-
-    ``bug_compatible`` forwards to ``_stable_top_names`` for byte-level
-    parity with the reference's buggy scored-category path (see there)."""
+    """Top-k content lists per category + web-detection family."""
     existing = list(df.columns)
     parsed = parse_response(response_column)
     new_columns: Dict[str, Column] = {}
@@ -231,7 +214,7 @@ def format_content_detection(
         field, name_key = CONTENT_CATEGORIES[category]
         col_name = generate_unique(f"{category}_list", existing, column_prefix)
         new_columns[col_name] = _stable_top_names(
-            parsed[field], "score", name_key, minimum_score, max_results, bug_compatible
+            parsed[field], "score", name_key, minimum_score, max_results
         )
         descriptions[col_name] = f"List of {category}s from the extractor"
     if "web" in content_categories:
@@ -240,7 +223,7 @@ def format_content_detection(
         new_columns[label_col] = F.coalesce(
             F.try_element_at(
                 _stable_top_names(
-                    web["bestGuessLabels"], None, "label", minimum_score, max_results, bug_compatible
+                    web["bestGuessLabels"], None, "label", minimum_score, max_results
                 ),
                 F.lit(1),
             ),
@@ -249,31 +232,31 @@ def format_content_detection(
         descriptions[label_col] = "Best-guess web label"
         entity_col = generate_unique("web_entity_list", existing, column_prefix)
         new_columns[entity_col] = _stable_top_names(
-            web["webEntities"], "score", "description", minimum_score, max_results, bug_compatible
+            web["webEntities"], "score", "description", minimum_score, max_results
         )
         descriptions[entity_col] = "List of web entities"
         full_col = generate_unique("web_full_matching_image_list", existing, column_prefix)
         new_columns[full_col] = F.filter(
             _stable_top_names(
-                web["fullMatchingImages"], None, "url", minimum_score, max_results, bug_compatible
+                web["fullMatchingImages"], None, "url", minimum_score, max_results
             ),
             lambda u: ~u.contains("x-raw-image:///"),
         )
         descriptions[full_col] = "Web images fully matching the input"
         partial_col = generate_unique("web_partial_matching_image_list", existing, column_prefix)
         new_columns[partial_col] = _stable_top_names(
-            web["partialMatchingImages"], None, "url", minimum_score, max_results, bug_compatible
+            web["partialMatchingImages"], None, "url", minimum_score, max_results
         )
         descriptions[partial_col] = "Web images partially matching the input"
         pages_col = generate_unique("web_page_match_list", existing, column_prefix)
         new_columns[pages_col] = _stable_top_names(
-            web["pagesWithMatchingImages"], None, "url", minimum_score, max_results, bug_compatible
+            web["pagesWithMatchingImages"], None, "url", minimum_score, max_results
         )
         descriptions[pages_col] = "Web pages with matching images"
         similar_col = generate_unique("web_similar_image_list", existing, column_prefix)
         new_columns[similar_col] = F.filter(
             _stable_top_names(
-                web["visuallySimilarImages"], None, "url", minimum_score, max_results, bug_compatible
+                web["visuallySimilarImages"], None, "url", minimum_score, max_results
             ),
             lambda u: ~u.contains("x-raw-image:///"),
         )

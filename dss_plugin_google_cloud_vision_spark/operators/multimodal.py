@@ -7,8 +7,8 @@ the in-table equivalent of the reference's folder-of-blobs model
 (reference: python-lib/document_utils.py blob streams; SURVEY.md §1.1
 "Files as blobs"). The Spark-side plumbing here is real and tested: Arrow
 batch iteration (``mapInPandas``), schema contracts, per-batch vectorized
-NumPy feature extraction, deterministic frame sampling, error-column
-capture for undecodable payloads.
+NumPy feature extraction, error-column capture for undecodable payloads.
+``extract_media_features`` is the one media operator.
 
 Codec status — ALL THREE modalities now decode for real:
 
@@ -19,9 +19,8 @@ Codec status — ALL THREE modalities now decode for real:
 - **Audio**: 16-bit PCM WAV via ``functions.audio`` (stdlib ``wave``).
   Features come from actual sample values.
 - **Video**: uncompressed RGB24 AVI via ``functions.video`` (RIFF walk,
-  DIB row unpadding/reorder, idx1-style frame index for sampling).
-  Features come from actual frame pixels; the frame sampler seeks to
-  real ``00db`` chunk offsets without decoding.
+  DIB row unpadding/reorder, ``00db`` chunk walk). Features come from
+  actual frame pixels.
 
 Payloads none of these codecs accept (e.g. a compressed mp4) land in the
 error column — or raise under ``strict=True`` (fail-fast). A production
@@ -197,110 +196,3 @@ def extract_media_features(
 
     return df.mapInPandas(process, schema)
 
-
-def sample_video_frames(
-    df: DataFrame,
-    payload_column: str = "payload",
-    n_frames: int = 4,
-    strict: bool = False,
-) -> DataFrame:
-    """Deterministic frame sampling, 1→N fan-out inside ``mapInPandas``
-    (same shape as the PDF page explode): emits EXACTLY ``n_frames`` rows
-    per non-empty video on every path — a video with fewer source frames
-    than requested repeats frames (duplicate ``frame_index`` values), it
-    never silently under-emits. Empty payloads emit zero rows.
-
-    AVI payloads sample REAL frames: an index walk over the ``movi`` list
-    (``functions.video.avi_frame_offsets`` — no pixel decode, the way a
-    real sampler seeks by timestamp) picks ``n_frames`` evenly spaced
-    source frames; ``frame_index`` is the source frame ordinal and
-    ``frame_offset`` the absolute byte offset of that frame's chunk data.
-    Non-AVI payloads fall back to evenly spaced raw byte offsets with
-    ``frame_index`` 0..n-1 — or abort the task under ``strict=True``
-    (fail-fast, consistent with ``extract_media_features``)."""
-    from ..functions.video import VideoDecodeError, avi_frame_offsets
-
-    out_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{out_fields}, frame_index int, frame_offset bigint"
-
-    def process(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keep_rows: list = []
-            frame_index: list = []
-            frame_offset: list = []
-            for pos, payload in enumerate(pdf[payload_column]):
-                data = bytes(payload) if payload is not None else b""
-                if len(data) == 0:
-                    continue
-                try:
-                    offsets, _w, _h, _fps = avi_frame_offsets(data)
-                    total = len(offsets)
-                    # exactly n_frames picks per video — videos with fewer
-                    # source frames than requested repeat frames (evenly
-                    # spaced positions collapse onto the same ordinal), so
-                    # the 1→n_frames fan-out contract matches the non-AVI
-                    # fallback path
-                    picks = (np.arange(n_frames, dtype=np.int64) * total) // n_frames
-                    for src in picks:
-                        keep_rows.append(pos)
-                        frame_index.append(int(src))
-                        frame_offset.append(offsets[int(src)][0])
-                except VideoDecodeError:
-                    if strict:
-                        raise
-                    for j in range(n_frames):
-                        keep_rows.append(pos)
-                        frame_index.append(j)
-                        frame_offset.append(len(data) * j // n_frames)
-            if not keep_rows:
-                continue
-            out = pdf.iloc[keep_rows].reset_index(drop=True)
-            out["frame_index"] = np.array(frame_index, dtype=np.int32)
-            out["frame_offset"] = np.array(frame_offset, dtype=np.int64)
-            yield out
-
-    return df.mapInPandas(process, schema)
-
-
-def resize_image(
-    df: DataFrame,
-    payload_column: str = "payload",
-    target_width: int = 224,
-    target_height: int = 224,
-    strict: bool = False,
-) -> DataFrame:
-    """REAL image resize: decode (PNG/PPM) → nearest-neighbour resample
-    (pure numpy index arithmetic — deterministic on every platform) →
-    re-encode as PNG. One ``mapInPandas`` stage; undecodable payloads land
-    in ``resize_error`` (or abort the task under ``strict=True``).
-
-    Output: passthrough + ``resized`` binary + ``resize_error`` string."""
-    from ..functions.imaging import ImageDecodeError, decode_image, encode_png
-
-    out_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{out_fields}, resized binary, resize_error string"
-
-    def process(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = []
-            errors = []
-            for payload in pdf[payload_column]:
-                try:
-                    pixels, _codec = decode_image(bytes(payload or b""))
-                    height, width = pixels.shape[0], pixels.shape[1]
-                    rows = (np.arange(target_height, dtype=np.int64) * height) // target_height
-                    cols = (np.arange(target_width, dtype=np.int64) * width) // target_width
-                    resampled = pixels[rows][:, cols]
-                    resized.append(encode_png(resampled))
-                    errors.append("")
-                except (ValueError, ImageDecodeError) as error:
-                    if strict:
-                        raise
-                    resized.append(None)
-                    errors.append(str(error))
-            pdf = pdf.copy()
-            pdf["resized"] = resized
-            pdf["resize_error"] = errors
-            yield pdf
-
-    return df.mapInPandas(process, schema)

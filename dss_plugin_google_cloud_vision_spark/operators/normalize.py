@@ -65,15 +65,3 @@ def normalized_dedup_groups(
         .drop("_nfp")
     )
 
-
-def normalized_dedup_keep_first(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Survivor set under normalized-fingerprint dedup: the min-id row of
-    every group, original (raw) text preserved — DELEGATES to
-    ``dedup.exact_dedup_keep_first`` keyed on the normalized column (one
-    shared election implementation, per the reuse rule)."""
-    from .dedup import exact_dedup_keep_first
-
-    with_norm = df.withColumn("_norm", normalized_text_column(text_col))
-    return exact_dedup_keep_first(with_norm, id_col, "_norm").drop("_norm")

@@ -7,13 +7,14 @@ Reference dataflow being re-expressed (see SURVEY.md §3.2): path table →
 ``split_all_documents`` (explode to pages, python-lib/document_utils.py:
 158-210) → ``parallelizer`` with the per-page API call (python-lib/
 parallelizer.py:160-250) → response parsing into row-level columns
-(python-lib/google_vision_api_client.py:59-78). ``route_payload`` is the
-engine's one magic-byte router (``operators.documents`` uses it too) and
-``extract_document_typed`` its one per-document kernel. ``extract_pages``
-(the reference's exact API-column contract: response JSON / error_message /
-error_type / empty-string sentinels, module-qualified error types) and
-``extract_pages_typed`` (typed columns, no JSON) share one batch loop,
-``_page_stage``: one Python crossing per batch, per-consumer output.
+(python-lib/google_vision_api_client.py:59-78). This stage is the only
+split/extract path. ``route_payload`` is the engine's one magic-byte
+router and ``extract_document_typed`` its one per-document kernel.
+``extract_pages`` (the reference's exact API-column contract: response
+JSON / error_message / error_type / empty-string sentinels,
+module-qualified error types) and ``extract_pages_typed`` (typed columns,
+no JSON) share one batch loop, ``_page_stage``: one Python crossing per
+batch, per-consumer output.
 
 Scale properties:
 - **No shuffle**: document→page fan-out happens inside the stage (an

@@ -60,26 +60,3 @@ def assign_fetch_slots(
         }
     )
 
-
-def crawl_partition_plan(
-    scheduled: DataFrame,
-    n_partitions: int,
-    bucket_column: Optional[str] = None,
-) -> DataFrame:
-    """Physical crawl plan on top of ``assign_fetch_slots`` output:
-    repartition so ALL urls of a host (or (host, bucket) pair) land in ONE
-    task, then sort within partitions by (host, fetch_slot, fetch_seq).
-
-    Per-host politeness becomes task-LOCAL — an executor walks its hosts'
-    queues slot by slot with no cross-executor coordination (the only
-    correct distributed form of the reference's process-local token
-    bucket). Plan shape: one Exchange on the host hash + a partition-local
-    sort (``sortWithinPartitions``, never a global Sort). Hot hosts bound
-    per-task size via ``bucket_column`` exactly as in
-    ``assign_fetch_slots``."""
-    if n_partitions < 1:
-        raise ValueError(f"n_partitions must be >= 1, got {n_partitions}")
-    keys = ["host"] + ([bucket_column] if bucket_column else [])
-    return scheduled.repartition(n_partitions, *keys).sortWithinPartitions(
-        "host", "fetch_slot", "fetch_seq"
-    )

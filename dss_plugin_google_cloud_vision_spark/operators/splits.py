@@ -51,7 +51,10 @@ def split_column(
 ) -> Column:
     """The split name for a row, as a CASE chain over cumulative per-mille
     ranges in the given split order (order is part of the contract: the
-    same (seed, order, weights) always yields the same assignment)."""
+    same (seed, order, weights) always yields the same assignment).
+    Row-local (zero shuffle): the assignment is a pure function of the id,
+    so it can be recomputed anywhere — which is exactly what lets
+    downstream audits avoid carrying a split table."""
     pairs = _validate_splits(splits_milli)
     bucket = split_bucket_column(id_col, seed)
     expr: Column = F.lit(pairs[-1][0])
@@ -63,19 +66,6 @@ def split_column(
     for name, bound in reversed(conds):
         expr = F.when(bucket < bound, F.lit(name)).otherwise(expr)
     return expr
-
-
-def assign_split(
-    df: DataFrame,
-    splits_milli=DEFAULT_SPLITS_MILLI,
-    id_col: str = "doc_id",
-    seed: int = 7,
-) -> DataFrame:
-    """Add a ``split`` column. Row-local (zero shuffle): the assignment is
-    a pure function of the id, so it can be recomputed anywhere — which is
-    exactly what lets downstream audits avoid carrying a split table."""
-    col = split_column(splits_milli, id_col, seed)  # validates weights first
-    return df.withColumn("split", col)
 
 
 def split_leakage_report(

@@ -121,40 +121,6 @@ WINNOW_K = 3  # token k-grams (the engine's shingle grain)
 WINNOW_W = 4  # selection window (guarantee: any >= w+k-1-token match shares a fingerprint)
 
 
-def winnow_selection_column(
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    tokens: Column | None = None,
-) -> Column:
-    """Winnowing fingerprint selection (Schleimer/Wilkerson/Aiken, the
-    MOSS algorithm) over token k-gram md5s: each sliding window of ``w``
-    consecutive k-gram hashes contributes its MINIMUM (ties → rightmost
-    position, the paper's robust-winnowing rule), duplicates collapsed.
-    Guarantees every shared run of ≥ w+k-1 tokens between two documents
-    shares at least one selected fingerprint — positional near-dup
-    evidence at ~2/(w+1) the k-gram density.
-
-    Entirely row-local (array ops). Candidates are encoded as
-    ``md5hex || '|' || lpad(10^7 - pos, 8)`` strings so a plain
-    lexicographic min picks (smallest hash, then LARGEST pos) — string
-    min is engine-neutral where struct ordering is a dialect trap.
-    Documents shorter than w k-grams winnow one whole-array window
-    (``shingles_column``'s own <k fallback applies below that). Returns
-    the SORTED distinct selection array.
-
-    Perf: this ONE-EXPRESSION form re-evaluates the encode subtree per
-    window (higher-order lambdas get the alias re-inlined unless it is a
-    bound attribute — the quadratic trap the shingles docstring
-    records); use it for ad-hoc/small inputs and prefer
-    ``winnow_fingerprint_table``, which stages each array through a
-    bound column (measured 18.6x at sf0.1)."""
-    from .dedup import shingles_column
-
-    kgrams = shingles_column(text_col, k, tokens=tokens)
-    return _winnow_select(_winnow_encode(kgrams), w)
-
-
 def _winnow_encode(kgrams: Column) -> Column:
     """k-gram array → encoded candidate array (md5 + position suffix).
     The position term (10^7 - pos) is ENFORCED positive (assert_true —
@@ -187,9 +153,10 @@ def _staged_winnow_encoded(
 ) -> DataFrame:
     """(id, _enc) with every array stage bound through a column — the
     load-bearing staging that defeats the higher-order re-inline
-    quadratic (CLAUDE.md lambda gotcha; one-expression form measured
-    18.6x slower at sf0.1). Single implementation shared by the per-doc
-    table and the pair generator so a staging fix can never diverge."""
+    quadratic (lambdas re-inline an unbound subtree per window; a
+    one-expression form measured 18.6x slower at sf0.1). Single
+    implementation shared by the per-doc table and the pair generator so
+    a staging fix can never diverge."""
     from .dedup import shingles_column
 
     bound = df.select(
@@ -202,7 +169,14 @@ def _staged_winnow_encoded(
 
 
 def _winnow_select(encoded: Column, w: int) -> Column:
-    """Encoded candidates → sorted distinct window minima."""
+    """Encoded candidates → sorted distinct window minima: winnowing
+    (Schleimer/Wilkerson/Aiken, the MOSS algorithm). Each window of ``w``
+    consecutive k-gram hashes contributes its minimum; the string encoding
+    ``md5hex || '|' || lpad(10^7 - pos, 8)`` makes a plain lexicographic
+    min pick (smallest hash, then LARGEST pos) — the robust-winnowing
+    rightmost tie-break, engine-neutral where struct ordering is a dialect
+    trap. Any shared run of ≥ w+k-1 tokens shares a selected hash;
+    documents shorter than w k-grams winnow one whole-array window."""
     n_windows = F.greatest(F.size(encoded) - (w - 1), F.lit(1))
     selections = F.transform(
         F.sequence(F.lit(1), n_windows),

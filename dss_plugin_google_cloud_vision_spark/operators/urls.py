@@ -108,24 +108,3 @@ def latest_per_url(
         )
     )
 
-
-def keep_latest_rows(
-    df: DataFrame,
-    url_col: str = "url",
-    ts_col: str = "warc_ts",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Full-row form of :func:`latest_per_url`: the input rows that WON
-    their canonical-url election, every column intact.
-
-    The election output is canonical-url grain (corpus-sized — one row
-    per logical page, never broadcastable), so the recovery is a
-    left-semi shuffle join on ``id_col`` alone: ``kept_id`` is unique
-    per group and ``id_col`` must be row-unique in ``df`` (doc_id is).
-    Joining on the id keeps the shuffle narrow — one long column per
-    side — instead of re-shuffling payload columns on the url key.
-    """
-    winners = latest_per_url(df, url_col, ts_col, id_col).select(
-        F.col("kept_id").alias(id_col)
-    )
-    return df.join(winners, id_col, "left_semi")

@@ -526,7 +526,7 @@ def fingerprint_sql(k: int = 5) -> str:
 
 
 def pii_redaction_sql() -> str:
-    """Mirror of q_pii_redaction: same planted text, same PII_PATTERNS
+    """Mirror of q_doc_signals' PII side: same planted text, same PII_PATTERNS
     constants (Java-regex ∩ RE2 subset), same replacement order."""
     from .operators.textstats import PII_PATTERNS
 
@@ -549,7 +549,7 @@ def pii_redaction_sql() -> str:
 
 def repetition_sql() -> str:
     """Mirror of operators.textstats.repetition_table over the planted-spam
-    corpus of q_repetition_stats."""
+    corpus of q_doc_signals' repetition side."""
     return (
         "WITH corpus AS ("
         " SELECT doc_id, CASE WHEN doc_id % 5 = 0"

@@ -5,8 +5,10 @@ text-detection formatting → (optionally) document-level merge.
 This is the Spark re-expression of the reference's document recipe
 (SURVEY.md §3.2, custom-recipes/google-cloud-vision-document-text-detection/
 recipe.py:10-44): one narrow extraction stage plus exactly one shuffle
-(the document-level groupBy), instead of four driver thread pools and
-per-page blob round-trips.
+(the document-level groupBy, ``merge_documents``), instead of four driver
+thread pools and per-page blob round-trips. The fused stage
+(``operators.pages``) is the only split/extract path: it splits and
+numbers pages inside the stage, so no exploded page-payload table exists.
 """
 
 from __future__ import annotations
@@ -14,10 +16,10 @@ from __future__ import annotations
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..errors import ErrorHandling
 from ..naming import build_unique_column_names
-from ..operators.documents import merge_documents
 from ..operators.formatters import (
     format_text_detection,
     move_api_columns_to_end,
@@ -26,6 +28,7 @@ from ..operators.formatters import (
 from ..operators.pages import extract_pages
 
 DEFAULT_PREFIX = "content_api"
+PAGE_NUMBER_COLUMN = "page_number"
 
 
 class EmptyInputError(ValueError):
@@ -38,6 +41,35 @@ def guard_nonempty(df: DataFrame, message: str) -> DataFrame:
     if df.isEmpty():
         raise EmptyInputError(message)
     return df
+
+
+def merge_documents(
+    page_df: DataFrame,
+    key_column: str = "url",
+    page_number_column: str = PAGE_NUMBER_COLUMN,
+    text_column: str = "detections_concat",
+    page_separator: str = "\f",
+) -> DataFrame:
+    """Reassemble per-page texts into document text in page order —
+    the reference's groupby-merge (document_utils.py:329-377) with the
+    page-ordinal sort made explicit. One shuffle on the document key.
+
+    Output: key, ``page_count``, ``doc_text``. Error pages contribute empty
+    text; page order is (page_number asc, nulls first) exactly like the
+    reference's page-number insert (:374-375).
+    """
+    ordered = F.array_sort(
+        F.collect_list(
+            F.struct(
+                F.coalesce(F.col(page_number_column), F.lit(0)).alias("pn"),
+                F.coalesce(F.col(text_column), F.lit("")).alias("t"),
+            )
+        )
+    )
+    return page_df.groupBy(key_column).agg(
+        F.count("*").alias("page_count"),
+        F.array_join(F.transform(ordered, lambda s: s["t"]), page_separator).alias("doc_text"),
+    )
 
 
 class ExtractionPlan(NamedTuple):
@@ -57,7 +89,6 @@ def run_extraction_pipeline(
 ) -> ExtractionPlan:
     if check_nonempty:
         guard_nonempty(df, "No pages to process")
-    input_columns = list(df.columns)
     extracted = extract_pages(
         df,
         html_column=html_column,
@@ -66,7 +97,7 @@ def run_extraction_pipeline(
         verbose=verbose,
         drop_payload=drop_payload,
     )
-    column_names = build_unique_column_names(input_columns, column_prefix)
+    column_names = build_unique_column_names(df.columns, column_prefix)
     formatted = format_text_detection(extracted, column_names.response, column_prefix)
     pages = move_api_columns_to_end(
         with_column_descriptions(formatted.df, formatted.column_descriptions),

@@ -76,51 +76,3 @@ def read_column_descriptions(spark: SparkSession, target: str) -> Dict[str, str]
             return json.load(handle)
     return {}
 
-
-DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
-
-
-def write_sized_output(
-    df: DataFrame,
-    target: str,
-    target_file_bytes: int = DEFAULT_TARGET_FILE_BYTES,
-    sample_rows: int = 1000,
-    mode: str = "overwrite",
-) -> int:
-    """Write parquet with a per-file size target — the small-files guard a
-    100 TB pipeline needs (an extraction job with 10^5 tasks would
-    otherwise emit 10^5 tiny files and every downstream scan pays the
-    open/footer cost per file).
-
-    Mechanism: estimate bytes/row from a ``sample_rows``-row sample's
-    in-memory size (cheap driver-side estimate; parquet compresses further
-    so the target is an upper-bound heuristic), derive ``maxRecordsPerFile``
-    — which caps file size WITHOUT a shuffle — and let AQE's coalesce
-    handle the too-many-small-partitions side. Returns the
-    records-per-file used.
-
-    This is the parquet-path analogue of Iceberg's
-    ``write.target-file-size-bytes`` table property, which the Iceberg
-    branch of ``write_output`` inherits from the table configuration.
-    """
-    sample = df.limit(sample_rows).collect()
-    if sample:
-        # driver-side row-size estimate: sum of string/binary payloads +
-        # fixed 16B per primitive — deliberately rough, upper-bound-safe
-        def row_bytes(row) -> int:
-            total = 0
-            for value in row:
-                if isinstance(value, (str, bytes, bytearray)):
-                    total += len(value)
-                elif isinstance(value, (list, tuple)):
-                    total += 16 * len(value)
-                else:
-                    total += 16
-            return total
-
-        avg = max(1, sum(row_bytes(r) for r in sample) // len(sample))
-    else:
-        avg = 1024
-    records_per_file = max(1, target_file_bytes // avg)
-    df.write.mode(mode).option("maxRecordsPerFile", records_per_file).parquet(target)
-    return records_per_file

@@ -23,7 +23,8 @@ atomic and the job scheduler serializes increments).
 
 Resume is one increment at a time (``run_with_snapshot_resume``): pin
 the current snapshot, anti-join the input against its keys (only the key
-column is read), extract what remains and commit it.
+column is read), extract what remains and commit it. An increment that
+finds nothing new publishes nothing.
 
 Lineage is one row per extraction task partition (``with_lineage``):
 partition id, page rows out, success/error counts, wall ms — the
@@ -42,11 +43,13 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 from typing import Iterable, Iterator, List, Optional
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_DIR = "snapshots"
@@ -57,6 +60,16 @@ LINEAGE_DDL = (
     "run_id string, partition_id int, n_output bigint, n_success bigint, "
     "n_error bigint, elapsed_ms bigint"
 )
+
+
+def _parquet_rows(directory: str) -> int:
+    """Row count of a written parquet directory from its part files'
+    footers — no Spark job."""
+    return sum(
+        pq.read_metadata(os.path.join(directory, name)).num_rows
+        for name in os.listdir(directory)
+        if name.endswith(".parquet") and not name.startswith((".", "_"))
+    )
 
 
 class SnapshotLog:
@@ -101,14 +114,22 @@ class SnapshotLog:
 
     def commit(self, df: DataFrame, run_id: Optional[str] = None) -> int:
         """Write ``df`` as a new data directory and publish the next
-        snapshot manifest atomically. Returns the new snapshot id."""
+        snapshot manifest atomically. Returns the new snapshot id — or,
+        when ``df`` wrote no rows and a parent exists, deletes the
+        directory and returns the parent id without publishing (an idle
+        increment adds no manifest and no data directory). The first
+        commit on an empty log always publishes."""
         parent = self.current_snapshot_id()
         snapshot_id = (parent or 0) + 1
         # ALWAYS attempt-unique: a retry after a crash-between-write-and-
         # publish must not collide with its own orphan data directory even
         # under a stable run_id
         commit_dir = f"s{snapshot_id:08d}-{run_id or 'run'}-{uuid.uuid4().hex[:12]}"
-        df.write.parquet(os.path.join(self.data_dir, commit_dir))
+        commit_path = os.path.join(self.data_dir, commit_dir)
+        df.write.parquet(commit_path)
+        if parent is not None and _parquet_rows(commit_path) == 0:
+            shutil.rmtree(commit_path)
+            return parent
         dirs = self.manifest(parent)["dirs"] if parent else []
         self._publish_manifest(
             {
@@ -174,8 +195,6 @@ class SnapshotLog:
         unreachable only before its manifest publish, which single-writer
         scheduling (module docstring) already excludes. Returns the
         removed directory names."""
-        import shutil
-
         reachable = set()
         for snapshot_id in self.snapshot_ids():
             reachable.update(self.manifest(snapshot_id)["dirs"])

@@ -134,19 +134,3 @@ def test_language_hint_resource_boundaries():
     params = validate_params(language="en", custom_language_hints="en, xx ,fr")
     assert params.language_hints == ["en", "xx", "fr"]
 
-
-def test_write_sized_output_caps_file_rows(spark, tmp_path):
-    """maxRecordsPerFile derived from the sampled row size must cap every
-    output file's row count without a shuffle."""
-    import glob
-
-    from dss_plugin_google_cloud_vision_spark.sources.sinks import write_sized_output
-
-    df = spark.range(10_000).selectExpr("id", "repeat('x', 100) AS payload").coalesce(2)
-    rpf = write_sized_output(df, str(tmp_path / "sized"), target_file_bytes=100 * 1000)
-    assert 500 <= rpf <= 1200  # ~116B/row estimate -> ~860 rows/file
-    files = glob.glob(str(tmp_path / "sized" / "*.parquet"))
-    assert len(files) >= 10_000 // rpf  # capped into multiple files
-    for f in files:
-        n = spark.read.parquet(f).count()
-        assert n <= rpf

@@ -1100,26 +1100,6 @@ def test_semantic_dedup_trained_is_deterministic(spark, sf_dir):
     assert len(runs[0]) == emb.count()
 
 
-def test_keep_latest_rows_full_row_recovery(spark):
-    from dss_plugin_google_cloud_vision_spark.operators.urls import keep_latest_rows
-
-    rows = [
-        (10, "https://h.org/a?b=2&a=1", 100, "old"),
-        (11, "HTTPS://H.ORG:443/a?a=1&b=2&utm_x=1", 105, "mid"),
-        (12, "https://h.org/a?b=2&a=1#frag", 105, "new"),
-        (20, "http://solo.net/p", 50, "solo"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id int, url string, ts int, body string")
-    got = {
-        r["doc_id"]: r["body"]
-        for r in keep_latest_rows(df, ts_col="ts").collect()
-    }
-    # winner of the 3-visit group is id 12 (ts tie 105 breaks to max id);
-    # every original column survives
-    assert got == {12: "new", 20: "solo"}
-    assert set(keep_latest_rows(df, ts_col="ts").columns) == set(df.columns)
-
-
 def test_cluster_max_lower_dots_matches_reference_fold(spark):
     """The grouped pair kernel (semantic_dedup's r6 pair stage) must equal
     a brute-force per-pair LEFT-FOLD reference bit-for-bit: max over

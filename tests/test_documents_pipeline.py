@@ -1,18 +1,14 @@
 # -*- coding: utf-8 -*-
-"""Explode/merge document path (FIXTURES.md §4) + fused-vs-exploded parity
-+ end-to-end pipeline golden check."""
+"""Document path (FIXTURES.md §4): page numbering and split-error capture
+on the fused extraction stage, end-to-end pipeline golden check, document
+merge and curation."""
 
 import json
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from dss_plugin_google_cloud_vision_spark.functions.response import RESPONSE_DDL
-from dss_plugin_google_cloud_vision_spark.operators.documents import (
-    extract_split_pages,
-    merge_documents,
-    split_documents,
-)
+from dss_plugin_google_cloud_vision_spark.operators.pages import extract_pages
 from dss_plugin_google_cloud_vision_spark.plans.extract_pipeline import run_extraction_pipeline
 from dss_plugin_google_cloud_vision_spark.sources.pages import (
     PAGE_SEPARATOR,
@@ -24,21 +20,19 @@ N_ROWS = 64
 GOLDENS = json.loads((Path(__file__).parent / "goldens" / "extraction_goldens.json").read_text())
 
 
-def test_split_documents_explode(spark):
+def test_fused_page_numbers(spark):
+    """PDF pages are numbered 1..N, HTML pages and failed documents carry a
+    null page number, TIFF frames are numbered [1, 2]."""
     df = tiny_pages_df(spark, N_ROWS)
-    pages = split_documents(df).cache()
+    pages = extract_pages(df, drop_payload=True).cache()
     for i in range(N_ROWS):
         expected = expected_page(i)
         rows = pages.filter(F.col("url") == expected["url"]).collect()
         if expected["kind"] == "pdf":
             assert sorted(r["page_number"] for r in rows) == list(range(1, expected["page_count"] + 1))
-        elif expected["kind"] in ("badpdf",):
-            assert len(rows) == 1 and rows[0]["page_payload"] is None
         else:
             assert len(rows) == 1 and rows[0]["page_number"] is None
     pages.unpersist()
-    # split_documents keeps the input columns first, then page_payload, page_number
-    assert pages.columns == df.columns + ["page_payload", "page_number"]
 
     # TIFF payloads split through the same router: two frames per document
     from dss_plugin_google_cloud_vision_spark.sources.render import documents_as_tiff_pages
@@ -48,50 +42,37 @@ def test_split_documents_explode(spark):
         "doc_id long, text string, lang string",
     )
     tiff = documents_as_tiff_pages(docs)
-    tiff_pages = split_documents(tiff)
-    assert tiff_pages.columns == tiff.columns + ["page_payload", "page_number"]
     by_url = {}
-    for row in tiff_pages.collect():
-        assert row["page_payload"] is not None
+    for row in extract_pages(tiff, drop_payload=True).collect():
+        assert row["content_api_error_message"] == ""
         by_url.setdefault(row["url"], []).append(row["page_number"])
     assert len(by_url) == 4
     assert all(sorted(numbers) == [1, 2] for numbers in by_url.values())
-
-
-def test_exploded_path_matches_fused_path(spark):
-    df = tiny_pages_df(spark, N_ROWS)
-    exploded = extract_split_pages(split_documents(df))
-    parsed = exploded.withColumn(
-        "t", F.coalesce(F.from_json("document_text_api_response", RESPONSE_DDL)["fullTextAnnotation"]["text"], F.lit(""))
-    )
-    merged = merge_documents(parsed, text_column="t", page_separator=PAGE_SEPARATOR)
-    by_url = {r["url"]: r for r in merged.collect()}
-    for i in range(N_ROWS):
-        expected = expected_page(i)
-        golden = GOLDENS[expected["url"]]
-        row = by_url[expected["url"]]
-        if not golden["error"]:
-            assert row["page_count"] == golden["page_count"]
-            import hashlib
-
-            assert hashlib.md5(row["doc_text"].encode()).hexdigest() == golden["doc_md5"], expected["kind"]
-        else:
-            assert row["doc_text"] == ""
+    # merged in page order, byte-identical: half1 \f half2 of the source text
+    merged = {r["url"]: r for r in run_extraction_pipeline(tiff).documents.collect()}
+    for row in docs.collect():
+        toks = row["text"].split(" ")
+        doc = merged[f"https://docs.example.org/en/doc-{row['doc_id']}.tiff"]
+        assert doc["page_count"] == 2
+        assert doc["doc_text"] == " ".join(toks[:6]) + PAGE_SEPARATOR + " ".join(toks[6:])
 
 
 def test_split_error_routed_to_error_columns(spark):
     bad = [i for i in range(N_ROWS) if expected_page(i)["kind"] == "badpdf"]
     assert bad, "fixture should contain at least one unsplittable pdf in 64 rows"
     df = tiny_pages_df(spark, N_ROWS)
-    out = extract_split_pages(split_documents(df))
+    out = extract_pages(df, drop_payload=True)
     url = expected_page(bad[0])["url"]
-    row = out.filter(F.col("url") == url).collect()[0]
-    assert row["document_text_api_response"] == ""
-    assert row["document_text_api_error_message"] == "Document could not be split"
+    rows = out.filter(F.col("url") == url).collect()
+    assert len(rows) == 1
+    row = rows[0]
+    assert row["content_api_response"] == ""
+    assert row["content_api_error_message"] == "document could not be split"
     assert (
-        row["document_text_api_error_type"]
+        row["content_api_error_type"]
         == "dss_plugin_google_cloud_vision_spark.errors.DocumentSplitError"
     )
+    assert row["page_number"] is None
 
 
 def test_full_pipeline_end_to_end(spark):
@@ -146,43 +127,6 @@ def test_empty_input_guard(spark):
     # default: lazy pipelines tolerate empty inputs
     plan = run_extraction_pipeline(empty)
     assert plan.pages.count() == 0
-
-
-def test_tiff_exploded_matches_fused(spark):
-    """Three-way routing parity: TIFF payloads through the explicit
-    split→extract→merge path equal the fused pipeline's document output."""
-    from dss_plugin_google_cloud_vision_spark.sources.render import documents_as_tiff_pages
-
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"tok{i}w{j}" for j in range(12)), "en") for i in range(8)],
-        "doc_id long, text string, lang string",
-    )
-    pages = documents_as_tiff_pages(docs)
-
-    exploded = extract_split_pages(split_documents(pages))
-    parsed = exploded.withColumn(
-        "t",
-        F.coalesce(
-            F.from_json("document_text_api_response", RESPONSE_DDL)["fullTextAnnotation"]["text"],
-            F.lit(""),
-        ),
-    )
-    merged_explicit = {
-        r["url"]: (r["page_count"], r["doc_text"])
-        for r in merge_documents(parsed, text_column="t", page_separator=PAGE_SEPARATOR).collect()
-    }
-    fused = {
-        r["url"]: (r["page_count"], r["doc_text"])
-        for r in run_extraction_pipeline(pages).documents.collect()
-    }
-    assert merged_explicit == fused
-    assert all(count == 2 for count, _ in fused.values())
-    # byte identity: half1 \f half2 of the source text
-    for row in docs.collect():
-        toks = row["text"].split(" ")
-        expected = " ".join(toks[:6]) + PAGE_SEPARATOR + " ".join(toks[6:])
-        url = f"https://docs.example.org/en/doc-{row['doc_id']}.tiff"
-        assert fused[url][1] == expected
 
 
 def test_curate_corpus_removes_planted_duplicates(spark):

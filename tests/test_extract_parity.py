@@ -239,35 +239,6 @@ def test_custom_batch_response_parser(spark):
     assert values == {"hello": "HELLO", "world": "WORLD"}
 
 
-def test_input_columns_subset(spark):
-    """Column-subset mode: only declared columns cross Arrow→Python; the
-    function sees partial row-dicts; output and passthrough identical to
-    full-row mode."""
-    from dss_plugin_google_cloud_vision_spark.operators.enrichers import token_stats_row
-
-    df = spark.createDataFrame(
-        [(1, b"\x00" * 64, "hello world"), (2, b"\xff" * 64, "a b c")],
-        ["id", "payload", "text"],
-    )
-    from dss_plugin_google_cloud_vision_spark.errors import ExtractionError
-
-    full = extract(df, token_stats_row, (ExtractionError,), "stats_api")
-    narrow = extract(
-        df, token_stats_row, (ExtractionError,), "stats_api", input_columns=["text"]
-    )
-    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, narrow.collect()))
-
-    def wants_payload(row):
-        assert "payload" not in row  # subset contract: undeclared columns absent
-        return "ok"
-
-    out = extract(df, wants_payload, (ExtractionError,), "x_api", input_columns=["text"])
-    assert all(r["x_api_response"] == "ok" for r in out.collect())
-
-    with pytest.raises(ValueError):
-        extract(df, token_stats_row, (ExtractionError,), "stats_api", input_columns=["nope"])
-
-
 def test_verbose_error_raw_byte_parity_row_mode(spark):
     """Verbose row-mode error_raw must be byte-equal to the reference's
     ``str(error.args)`` (parallelizer.py:77) for both a single-arg and a

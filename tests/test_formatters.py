@@ -209,40 +209,6 @@ def test_formatter_plan_is_codegen_only(spark):
     assert "Python" not in plan, plan
 
 
-def test_content_list_bug_compatible_mode(spark):
-    """bug_compatible=True replicates the reference's precedence bug
-    verbatim (google_vision_api_formatting.py:131-136): scored categories
-    keep raw response order with NO min-score filter; unscored url lists
-    are dropped entirely when minimum_score > 0 (the None-key branch
-    compares 0 >= min)."""
-    result = format_content_detection(
-        _df(spark, LABELS_RESPONSE),
-        "response",
-        content_categories=("label",),
-        minimum_score=0.3,
-        max_results=10,
-        bug_compatible=True,
-    )
-    row = result.df.collect()[0]
-    # raw order, 0.1-scored 'low' NOT filtered, only empty names dropped
-    assert row["content_api_label_list"] == ["cat", "dog", "low", "bird"]
-
-    web = format_content_detection(
-        _df(spark, WEB_RESPONSE),
-        "response",
-        content_categories=("web",),
-        minimum_score=0.3,
-        max_results=10,
-        bug_compatible=True,
-    )
-    wrow = web.df.collect()[0]
-    # unscored lists: 0 >= 0.3 fails → everything dropped (the bug)
-    assert wrow["content_api_web_full_matching_image_list"] == []
-    assert wrow["content_api_web_label"] == ""
-    # scored entities: raw order, unfiltered
-    assert wrow["content_api_web_entity_list"] == ["beach", "sun"]
-
-
 def test_span_envelope_columns(spark):
     from dss_plugin_google_cloud_vision_spark.operators.formatters import span_envelope_columns
 

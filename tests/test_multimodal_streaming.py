@@ -8,8 +8,6 @@ from pyspark.sql import functions as F
 from dss_plugin_google_cloud_vision_spark.operators.multimodal import (
     FEATURE_BINS,
     extract_media_features,
-    resize_image,
-    sample_video_frames,
     synthetic_media_df,
 )
 
@@ -65,41 +63,6 @@ def test_media_strict_mode_fails_fast_on_undecodable(spark):
     with pytest.raises(Exception) as excinfo:
         extract_media_features(junk, strict=True).collect()
     assert "not an AVI payload" in str(excinfo.value)
-
-
-def test_frame_sampling_fanout(spark):
-    media = synthetic_media_df(spark, 9).filter(F.col("kind") == "video")
-    n_videos = media.count()
-    frames = sample_video_frames(media, n_frames=4)
-    assert frames.count() == n_videos * 4
-    # sampled offsets point at REAL frame chunk bodies ('00db' headers)
-    for row in frames.collect():
-        payload = bytes(row["payload"])
-        off = row["frame_offset"]
-        assert payload[off - 8 : off - 4] == b"00db"
-
-    from dss_plugin_google_cloud_vision_spark.functions.imaging import decode_image
-
-    # a video with FEWER source frames than requested still emits exactly
-    # n_frames rows (frames repeat) — the fan-out contract is uniform
-    # across the AVI and fallback paths
-    import numpy as np
-
-    from dss_plugin_google_cloud_vision_spark.functions.video import encode_avi
-
-    two_frame = encode_avi(np.zeros((2, 4, 4, 3), dtype=np.uint8), fps=8)
-    short = spark.createDataFrame([(1, two_frame)], "media_id bigint, payload binary")
-    short_rows = sample_video_frames(short, n_frames=4).collect()
-    assert len(short_rows) == 4
-    assert sorted(r["frame_index"] for r in short_rows) == [0, 0, 1, 1]
-
-    images = synthetic_media_df(spark, 9).filter(F.col("kind") == "image")
-    resized = {r["media_id"]: r for r in resize_image(images, target_width=32, target_height=20).collect()}
-    assert resized
-    for row in resized.values():
-        assert row["resize_error"] == ""
-        pixels, codec = decode_image(bytes(row["resized"]))
-        assert codec == "png" and pixels.shape == (20, 32, 3)
 
 
 def test_png_ppm_codec_roundtrip_and_filters():
@@ -213,8 +176,8 @@ def test_media_features_real_decode_analytic(spark):
 def test_avi_codec_roundtrip_and_analytic_video_features(spark):
     """AVI encode->decode is the identity (incl. DIB bottom-up/BGR/row
     padding); video features must come from DECODED FRAME PIXELS
-    (analytic expectation from the synthetic frame function); the frame
-    sampler picks evenly spaced SOURCE frame ordinals."""
+    (analytic expectation from the synthetic frame function); the chunk
+    walk finds one frame offset per encoded frame."""
     import numpy as np
 
     from dss_plugin_google_cloud_vision_spark.functions.video import (

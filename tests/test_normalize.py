@@ -1,12 +1,11 @@
 # -*- coding: utf-8 -*-
 """CCNet-style normalization: rule-by-rule hand cases, dedup-group
-semantics (n_distinct_raw), keep-first election, and the no-UDF plan."""
+semantics (n_distinct_raw), and the no-UDF plan."""
 
 from pyspark.sql import functions as F
 
 from dss_plugin_google_cloud_vision_spark.operators.normalize import (
     normalized_dedup_groups,
-    normalized_dedup_keep_first,
     normalized_text_column,
 )
 
@@ -39,18 +38,6 @@ def test_dedup_groups_and_distinct_raw(spark):
     got = {r.doc_id: (r.n_copies, r.n_distinct_raw) for r in normalized_dedup_groups(df).collect()}
     # group {1,2,3}: 3 copies, 2 distinct raws; group {4,5}: 2 copies, 2 raws
     assert got == {1: (3, 2), 4: (2, 2)}
-
-
-def test_keep_first_preserves_raw_text(spark):
-    rows = [
-        (7, "Hello World"),
-        (2, "hello world!"),
-        (9, "other doc"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    kept = {r.doc_id: r.text for r in normalized_dedup_keep_first(df).collect()}
-    # min-id winner of the variant group, raw (unnormalized) text intact
-    assert kept == {2: "hello world!", 9: "other doc"}
 
 
 def test_normalization_stays_in_codegen(spark):

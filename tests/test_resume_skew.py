@@ -123,44 +123,3 @@ def test_salted_repartition_preserves_rows(spark):
     assert out.count() == 100
     assert out.columns == df.columns
 
-
-def test_crawl_partition_plan_colocates_hosts(spark):
-    """Every host's queue lands in exactly one partition, ordered by
-    (fetch_slot, fetch_seq) within it; the sort is partition-local."""
-    from pyspark.sql import functions as F
-
-    from dss_plugin_google_cloud_vision_spark.operators.politeness import (
-        assign_fetch_slots,
-        crawl_partition_plan,
-    )
-
-    urls = spark.range(500).select(
-        F.format_string("https://h%s.example.org/p/%s", F.col("id") % 13, F.col("id")).alias("url")
-    )
-    plan = crawl_partition_plan(assign_fetch_slots(urls, rate_per_period=4), n_partitions=8)
-
-    spread = (
-        plan.withColumn("pid", F.spark_partition_id())
-        .groupBy("host")
-        .agg(F.countDistinct("pid").alias("n_parts"))
-        .agg(F.max("n_parts").alias("worst"))
-        .first()["worst"]
-    )
-    assert spread == 1
-
-    # partition-local ordering: per (pid, host), fetch_seq strictly increases
-    def check(iterator):
-        last = {}
-        for row in iterator:
-            key = row["host"]
-            assert row["fetch_seq"] > last.get(key, 0)
-            last[key] = row["fetch_seq"]
-        yield from ()
-
-    plan.rdd.mapPartitions(check).count()
-
-    physical = plan._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" in physical
-    # the Sort node prints "..., false, 0" for a partition-LOCAL sort
-    sort_line = physical.split("Sort [host")[1].splitlines()[0]
-    assert "], false" in sort_line, sort_line

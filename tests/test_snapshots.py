@@ -73,9 +73,14 @@ def test_snapshot_resume_exactly_once(spark, tmp_path):
     assert urls_1.isdisjoint(urls_2)
     assert len(urls_1 | urls_2) == pages.select("url").distinct().count()
 
-    # re-running the full input again is a no-op increment
+    # re-running the full input again is a no-op increment: it publishes
+    # no snapshot and leaves no data directory behind
+    n_data_dirs = len(os.listdir(log.data_dir))
     third = run_with_snapshot_resume(spark, pages, build, log, run_id="r3")
     assert third["snapshot_keys"] == second["snapshot_keys"]
+    assert third["snapshot_id"] == 2
+    assert log.snapshot_ids() == [1, 2]
+    assert len(os.listdir(log.data_dir)) == n_data_dirs
 
 
 def test_binary_file_ingest_to_extraction(spark, tmp_path):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from dss_plugin_google_cloud_vision_spark.operators.splits import (
     DEFAULT_SPLITS_MILLI,
-    assign_split,
+    split_column,
     split_leakage_report,
 )
 
@@ -37,7 +37,7 @@ def _find_ids(split_name, n, start=0):
 
 
 def test_assignment_matches_hashlib_and_ratios(spark):
-    df = assign_split(spark.range(3000).withColumnRenamed("id", "doc_id"))
+    df = spark.range(3000).withColumnRenamed("id", "doc_id").withColumn("split", split_column())
     rows = {r["doc_id"]: r["split"] for r in df.collect()}
     for doc_id in (0, 1, 17, 999, 2999):
         assert rows[doc_id] == _expected_split(doc_id)
@@ -48,24 +48,29 @@ def test_assignment_matches_hashlib_and_ratios(spark):
 
 
 def test_assignment_is_partitioning_invariant(spark):
-    one = assign_split(spark.range(500).withColumnRenamed("id", "doc_id").coalesce(1))
-    many = assign_split(spark.range(500).withColumnRenamed("id", "doc_id").repartition(13))
+    ids = spark.range(500).withColumnRenamed("id", "doc_id")
+    one = ids.coalesce(1).withColumn("split", split_column())
+    many = ids.repartition(13).withColumn("split", split_column())
     assert sorted(map(tuple, one.collect())) == sorted(map(tuple, many.collect()))
 
 
 def test_assignment_is_row_local(spark):
-    plan = assign_split(
-        spark.range(100).withColumnRenamed("id", "doc_id")
-    )._jdf.queryExecution().executedPlan().toString()
+    plan = (
+        spark.range(100)
+        .withColumnRenamed("id", "doc_id")
+        .withColumn("split", split_column())
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
     assert "Exchange" not in plan
 
 
 def test_split_validation():
-    df = None
     with pytest.raises(ValueError, match="sum to 1000"):
-        assign_split(df, splits_milli=(("train", 900), ("valid", 10)))
+        split_column(splits_milli=(("train", 900), ("valid", 10)))
     with pytest.raises(ValueError, match="positive"):
-        assign_split(df, splits_milli=(("train", 1100), ("valid", -100)))
+        split_column(splits_milli=(("train", 1100), ("valid", -100)))
 
 
 def test_leakage_report_hand_computed(spark):

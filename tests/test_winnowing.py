@@ -9,8 +9,9 @@ import random
 from dss_plugin_google_cloud_vision_spark.operators.textstats import (
     WINNOW_K,
     WINNOW_W,
+    _staged_winnow_encoded,
+    _winnow_select,
     winnow_fingerprint_table,
-    winnow_selection_column,
 )
 
 
@@ -30,13 +31,13 @@ def _py_winnow(text, k=WINNOW_K, w=WINNOW_W):
 
 
 def _spark_selections(spark, texts):
+    """Full selection arrays through the staging ``winnow_fingerprint_table``
+    runs (tokens → k-grams → encoded → window minima)."""
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id bigint, text string")
     from pyspark.sql import functions as F
 
-    bound = df.select("doc_id", "text", F.split("text", " ").alias("_toks"))
-    out = bound.select(
-        "doc_id", winnow_selection_column(tokens=F.col("_toks")).alias("sels")
-    )
+    enc = _staged_winnow_encoded(df, "doc_id", "text", WINNOW_K)
+    out = enc.select("doc_id", _winnow_select(F.col("_enc"), WINNOW_W).alias("sels"))
     return {r.doc_id: list(r.sels) for r in out.collect()}
 
 
