@@ -780,17 +780,17 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from dss_plugin_google_cloud_vision_spark.operators.dedup import stage_tokens
     from dss_plugin_google_cloud_vision_spark.operators.textstats import (
         fingerprint_column,
         rolling_hash_column,
         shingle_fingerprint_column,
     )
 
-    docs = _table(spark, sf_dir, "documents").withColumn("_toks", F.split("text", " "))
-    return docs.select(
+    return stage_tokens(_table(spark, sf_dir, "documents"), "doc_id", "text").select(
         "doc_id",
         fingerprint_column().alias("doc_md5"),
-        shingle_fingerprint_column(tokens=F.col("_toks")).alias("shingle_fp"),
+        shingle_fingerprint_column().alias("shingle_fp"),
         rolling_hash_column().alias("rolling_hash"),
     )
 

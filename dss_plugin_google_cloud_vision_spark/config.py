@@ -66,9 +66,7 @@ class ExtractionJobParams:
     """Validated engine job parameters."""
 
     batch_size: int = 10
-    parallel_workers: int = 4
     rate_limit: int = 1800
-    quota_period: int = 60
     error_handling: ErrorHandling = ErrorHandling.LOG
     minimum_score: float = 0.0
     max_results: int = 10
@@ -80,9 +78,7 @@ class ExtractionJobParams:
 def validate_params(
     *,
     batch_size: int = 10,
-    parallel_workers: int = 4,
     rate_limit: int = 1800,
-    quota_period: int = 60,
     error_handling: str = "LOG",
     minimum_score: float = 0.0,
     max_results: int = 10,
@@ -98,9 +94,8 @@ def validate_params(
     Ranges and overrides mirror the reference exactly:
     - batch size 1..16, forced to 1 on the document path
       (plugin_params_loader.py:157-164)
-    - concurrency 1..100 (:154-156)
-    - quota period >= 1, rate limit >= 1; rate divided by batch size when
-      batching (:148-176)
+    - rate limit >= 1; rate divided by batch size when batching
+      (:148-176)
     - minimum score 0..1 (:196-199), max results >= 1 (:209-212),
       aspect ratio 0.1..10 (:236-239)
     - at least one content category (:202-207)
@@ -112,12 +107,6 @@ def validate_params(
         raise ParamValidationError("Batch size must be between 1 and 16")
     if document_path:
         batch_size = 1
-    parallel_workers = int(parallel_workers)
-    if parallel_workers < 1 or parallel_workers > 100:
-        raise ParamValidationError("Concurrency must be between 1 and 100")
-    quota_period = int(quota_period)
-    if quota_period < 1:
-        raise ParamValidationError("Quota period must be greater than 1")
     rate_limit = int(rate_limit)
     if rate_limit < 1:
         raise ParamValidationError("Rate limit must be greater than 1")
@@ -150,9 +139,7 @@ def validate_params(
         language_hints = [h for h in str(custom_language_hints).replace(" ", "").split(",") if h]
     return ExtractionJobParams(
         batch_size=batch_size,
-        parallel_workers=parallel_workers,
         rate_limit=rate_limit,
-        quota_period=quota_period,
         error_handling=handling,
         minimum_score=minimum_score,
         max_results=max_results,

@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import stage_tokens
 from .selection import DSIR_N_BUCKETS, DSIR_SCALE, hashed_ngram_bucket, ngram_strings
 
 CLS_SEED = 17
@@ -53,13 +54,10 @@ def _ngram_occurrences(
     """(id_cols..., bucket) — one row per hashed unigram/bigram occurrence.
     ``id_cols`` may be aliasing expressions; they are applied once (the
     second projection references the post-alias names)."""
-    # stage the token array through a bound column (CLAUDE.md lambda
-    # rule): the inline split re-inlines per element_at in the bigram
-    # lambda — quadratic in document length
-    staged = df.select(*id_cols, F.split(F.col(text_col), " ").alias("_toks"))
+    staged = stage_tokens(df, *id_cols, text_col=text_col)
     exploded = staged.select(
         *[c for c in staged.columns if c != "_toks"],
-        F.explode(ngram_strings(text_col, tokens=F.col("_toks"))).alias("_ngram"),
+        F.explode(ngram_strings()).alias("_ngram"),
     )
     keep = [c for c in exploded.columns if c != "_ngram"]
     return exploded.select(

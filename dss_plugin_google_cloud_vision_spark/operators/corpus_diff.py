@@ -30,7 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import DEFAULT_N_HASHES, DEFAULT_SHINGLE_K, shingles_column, tokens_column
+from .dedup import (
+    DEFAULT_N_HASHES,
+    DEFAULT_SHINGLE_K,
+    minhash_slots,
+    shingles_column,
+    stage_tokens,
+)
 
 
 def corpus_shingles(
@@ -39,11 +45,8 @@ def corpus_shingles(
     """All shingle occurrences of a corpus as one column (NOT distinct —
     min-based consumers don't need it; set-based consumers distinct it
     themselves)."""
-    bound = df.select(F.col(text_col), tokens_column(text_col).alias("_toks"))
-    return bound.select(
-        F.explode(
-            shingles_column(text_col, shingle_k, tokens=F.col("_toks"))
-        ).alias("shingle")
+    return stage_tokens(df, text_col, text_col=text_col).select(
+        F.explode(shingles_column(text_col, shingle_k)).alias("shingle")
     )
 
 
@@ -58,12 +61,9 @@ def corpus_minhash(
     aggregation (no distinct, no shuffle wider than n_hashes columns).
     An EMPTY corpus yields n_hashes rows with NULL min_hash — slots that
     never match any other signature (plain SQL equality downstream)."""
-    sh = corpus_shingles(df, text_col, shingle_k)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{s}#"), F.col("shingle")))).alias(f"h{s}")
-        for s in range(n_hashes)
-    ]
-    wide = sh.agg(*aggs)
+    wide = corpus_shingles(df, text_col, shingle_k).agg(
+        *minhash_slots(F.col("shingle"), n_hashes)
+    )
     slots = F.array(
         *[
             F.struct(F.lit(s).alias("slot"), F.col(f"h{s}").alias("min_hash"))

@@ -91,27 +91,81 @@ def _drop_oversized_buckets(
 
 
 def tokens_column(text_col: str = "text") -> Column:
+    """The one tokenization rule: split on single spaces (the oracles'
+    ``string_split(text, ' ')``)."""
     return F.split(F.col(text_col), " ")
 
 
-def shingles_column(
-    text_col: str = "text", k: int = DEFAULT_SHINGLE_K, tokens: Column | None = None
-) -> Column:
-    """k-gram token shingles; documents shorter than k tokens contribute the
-    whole text as a single shingle. Mirrored 1:1 by the oracle SQL.
+def stage_tokens(df: DataFrame, *cols, text_col: str = "text") -> DataFrame:
+    """``df.select(*cols, tokens_column(text_col) AS _toks)`` — the one
+    staging step every n-gram builder (``token_ngrams``,
+    ``shingles_column``, ``ngram_strings``, the predictability tables)
+    reads ``_toks`` from; they fail at analysis without it.
 
-    Perf: pass ``tokens`` as a PRE-BOUND column (``df.withColumn("_toks",
-    tokens_column(...))``) whenever possible — an inline split expression is
-    re-evaluated by every ``element_at`` inside the transform lambda
-    (higher-order lambdas are interpreted, no common-subexpression
-    elimination), turning the shingle build quadratic in document length."""
-    toks = tokens_column(text_col) if tokens is None else tokens
-    positions = F.sequence(F.lit(1), F.size(toks) - (k - 1))
-    k_gram = F.transform(
-        positions,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + offset) for offset in range(k)]),
+    Why a bound column: an array EXPRESSION referenced inside a
+    higher-order lambda is re-inlined per element (CollapseProject keeps
+    only attribute/literal aliases out of lambdas, and interpreted lambdas
+    get no common-subexpression elimination), so an inline split is
+    re-evaluated by every ``element_at`` and the k-gram build turns
+    quadratic in document length. Measured: shingles 15x slower on the
+    sf0.1 fingerprints query (round 3), DSIR bigrams 10-24x (round 5).
+    Pass the text column among ``cols`` when a consumer needs it (the
+    shingle fallback below k tokens does)."""
+    return df.select(*cols, tokens_column(text_col).alias("_toks"))
+
+
+def _ngram_transform(n: int) -> Column:
+    """Space-joined n-grams of the staged ``_toks``, unguarded: below n
+    tokens the sequence runs DESCENDING, so every caller guards it."""
+    toks = F.col("_toks")
+    return F.transform(
+        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + offset) for offset in range(n)]),
     )
-    return F.when(F.size(toks) >= k, k_gram).otherwise(F.array(F.col(text_col)))
+
+
+def token_ngrams(n: int) -> Column:
+    """Space-joined n-grams of the staged ``_toks`` (``stage_tokens``);
+    empty below n tokens."""
+    return F.when(F.size(F.col("_toks")) >= n, _ngram_transform(n)).otherwise(
+        F.array().cast("array<string>")
+    )
+
+
+def shingles_column(text_col: str = "text", k: int = DEFAULT_SHINGLE_K) -> Column:
+    """k-gram token shingles of the staged ``_toks`` (``stage_tokens``);
+    documents shorter than k tokens contribute the whole text as a single
+    shingle. Mirrored 1:1 by the oracle SQL."""
+    return F.when(F.size(F.col("_toks")) >= k, _ngram_transform(k)).otherwise(
+        F.array(F.col(text_col))
+    )
+
+
+def shingle_sets(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = DEFAULT_SHINGLE_K
+) -> DataFrame:
+    """(id, sh): each document's distinct k-gram shingle set — the input of
+    every exact-Jaccard verification. To explode shingles, explode the
+    expression instead (see ``ngram_contamination``)."""
+    return stage_tokens(df, id_col, text_col, text_col=text_col).select(
+        F.col(id_col), F.array_distinct(shingles_column(text_col, k)).alias("sh")
+    )
+
+
+def minhash_slots(shingle_col: Column, n_hashes: int = DEFAULT_N_HASHES) -> List[Column]:
+    """The ``n_hashes`` MinHash aggregates h<s> = min(md5('<s>#' ||
+    shingle)) — per document in ``minhash_signature``, per corpus in
+    ``corpus_diff.corpus_minhash``. Mirrored by ``oracles._sig_cte``."""
+    return [
+        F.min(F.md5(F.concat(F.lit(f"{s}#"), shingle_col))).alias(f"h{s}")
+        for s in range(n_hashes)
+    ]
+
+
+def _jaccard_at_least(inter: Column, union: Column, threshold_milli: int) -> Column:
+    """Integer Jaccard test ``inter*1000 >= threshold_milli*union`` — no
+    float hashing hazards, identical in the oracle SQL."""
+    return inter * 1000 >= threshold_milli * union
 
 
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -145,18 +199,10 @@ def minhash_signature(
     """Per-doc MinHash signature: sig[s] = min over distinct shingles of
     md5('<s>#' || shingle). One explode + one aggregation pass with
     ``n_hashes`` parallel min() columns (map-side combinable)."""
-    bound = df.select(
-        F.col(id_col), F.col(text_col), tokens_column(text_col).alias("_toks")
-    )
-    exploded = bound.select(
-        F.col(id_col),
-        F.explode(shingles_column(text_col, shingle_k, tokens=F.col("_toks"))).alias("shingle"),
+    exploded = stage_tokens(df, id_col, text_col, text_col=text_col).select(
+        F.col(id_col), F.explode(shingles_column(text_col, shingle_k)).alias("shingle")
     ).distinct()
-    aggregates = [
-        F.min(F.md5(F.concat(F.lit(f"{s}#"), F.col("shingle")))).alias(f"h{s}")
-        for s in range(n_hashes)
-    ]
-    return exploded.groupBy(id_col).agg(*aggregates)
+    return exploded.groupBy(id_col).agg(*minhash_slots(F.col("shingle"), n_hashes))
 
 
 def lsh_band_keys(
@@ -231,14 +277,9 @@ def jaccard_verified_pairs(
     """Verify candidate pairs with exact shingle-set Jaccard, in integer
     arithmetic (inter*1000 >= threshold_milli*union — no float hashing
     hazards). Output: doc_a, doc_b, inter_size, union_size."""
-    shingle_sets = df.select(
-        F.col(id_col), F.col(text_col), tokens_column(text_col).alias("_toks")
-    ).select(
-        F.col(id_col),
-        F.array_distinct(shingles_column(text_col, shingle_k, tokens=F.col("_toks"))).alias("sh"),
-    )
-    a = shingle_sets.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = shingle_sets.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
+    sets = shingle_sets(df, id_col, text_col, shingle_k)
+    a = sets.select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
+    b = sets.select(F.col(id_col).alias("doc_b"), F.col("sh").alias("sh_b"))
     joined = candidates.join(a, "doc_a").join(b, "doc_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
@@ -249,7 +290,7 @@ def jaccard_verified_pairs(
             inter.alias("inter_size"),
             union.alias("union_size"),
         )
-        .filter(F.col("inter_size") * 1000 >= threshold_milli * F.col("union_size"))
+        .filter(_jaccard_at_least(F.col("inter_size"), F.col("union_size"), threshold_milli))
     )
 
 
@@ -742,13 +783,14 @@ def ngram_contamination(
     (floor(n_hit * 1000 / n_shingles)). Mirrored by
     ``oracles.ngram_contamination_sql``.
     """
+    # explode the shingle EXPRESSION, not shingle_sets' ``sh`` column: an
+    # explode over a column makes Spark infer size(sh) > 0 and push it
+    # below the staging projection, where the filter re-inlines the split
+    # into the k-gram lambda and builds every shingle set twice
     def doc_shingles(df: DataFrame) -> DataFrame:
-        toks = df.withColumn("_toks", tokens_column(text_col))
-        return toks.select(
+        return stage_tokens(df, id_col, text_col, text_col=text_col).select(
             F.col(id_col),
-            F.explode(
-                F.array_distinct(shingles_column(text_col, k, tokens=F.col("_toks")))
-            ).alias("shingle"),
+            F.explode(F.array_distinct(shingles_column(text_col, k))).alias("shingle"),
         )
 
     bench_shingles = (
@@ -822,31 +864,27 @@ def incremental_near_dup_filter(
         .distinct()
     )
 
-    def shingle_sets(df: DataFrame, out_id: str, out_sh: str) -> DataFrame:
-        bound = df.select(F.col(id_col), F.col(text_col), tokens_column(text_col).alias("_toks"))
-        return bound.select(
-            F.col(id_col).alias(out_id),
-            F.array_distinct(
-                shingles_column(text_col, shingle_k, tokens=F.col("_toks"))
-            ).alias(out_sh),
+    def sets(df: DataFrame, out_id: str, out_sh: str) -> DataFrame:
+        return shingle_sets(df, id_col, text_col, shingle_k).select(
+            F.col(id_col).alias(out_id), F.col("sh").alias(out_sh)
         )
 
     # the increment's shingle sets are built ONCE and reused by both the
     # cross-corpus and the within-increment verification (the oracle's
     # sh_i CTE plays the same dual role); guarded inc bands likewise feed
     # the within-increment self-join
-    inc_sets = shingle_sets(increment, "doc_i", "sh_i")
+    inc_sets = sets(increment, "doc_i", "sh_i")
     matched_corpus_ids = cross_cand.select(F.col("doc_c").alias(id_col)).distinct()
     pruned_corpus = corpus.join(F.broadcast(matched_corpus_ids), id_col, "left_semi")
     verified = (
         cross_cand.join(inc_sets, "doc_i")
-        .join(shingle_sets(pruned_corpus, "doc_c", "sh_c"), "doc_c")
+        .join(sets(pruned_corpus, "doc_c", "sh_c"), "doc_c")
         .select(
             "doc_i",
             F.size(F.array_intersect("sh_i", "sh_c")).alias("inter_size"),
             F.size(F.array_union("sh_i", "sh_c")).alias("union_size"),
         )
-        .filter(F.col("inter_size") * 1000 >= threshold_milli * F.col("union_size"))
+        .filter(_jaccard_at_least(F.col("inter_size"), F.col("union_size"), threshold_milli))
     )
     cross_dup = verified.select(F.col("doc_i").alias(id_col)).distinct()
     guarded_inc = _drop_oversized_buckets(inc_bands, ["band", "band_key"], max_bucket_size)
@@ -864,8 +902,11 @@ def incremental_near_dup_filter(
         self_cand.join(inc_sets.select(F.col("doc_i").alias("doc_a"), F.col("sh_i").alias("sh_a")), "doc_a")
         .join(inc_sets.select(F.col("doc_i").alias("doc_b"), F.col("sh_i").alias("sh_b")), "doc_b")
         .filter(
-            F.size(F.array_intersect("sh_a", "sh_b")) * 1000
-            >= threshold_milli * F.size(F.array_union("sh_a", "sh_b"))
+            _jaccard_at_least(
+                F.size(F.array_intersect("sh_a", "sh_b")),
+                F.size(F.array_union("sh_a", "sh_b")),
+                threshold_milli,
+            )
         )
         .select(F.col("doc_b").alias(id_col))
         .distinct()
@@ -926,7 +967,7 @@ def duplicate_span_removal(
     ``oracles.duplicate_span_sql``.
     """
     w = int(window_n)
-    base = df.select(F.col(id_col), tokens_column(text_col).alias("_toks"))
+    base = stage_tokens(df, id_col, text_col=text_col)
     toks = F.col("_toks")
     n = F.size(toks)
     # (id, idx, token): 1-based, mirrors the oracle
@@ -936,7 +977,7 @@ def duplicate_span_removal(
         n.alias("n_tokens"),
     ).select(id_col, (F.col("idx0") + 1).alias("idx"), "tok", "n_tokens")
     # Docs shorter than the window contribute NO windows. Guard like
-    # shingles_column: sequence(1, n-(w-1)) is DESCENDING (not empty) when
+    # token_ngrams: sequence(1, n-(w-1)) is DESCENDING (not empty) when
     # n < w, and the transform would then evaluate slice(toks, 0, w) and
     # abort the job (INVALID_PARAMETER_VALUE.START) — DuckDB's
     # generate_series is empty there, so this is also an oracle divergence.

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import stage_tokens, token_ngrams
+
 DSIR_N_BUCKETS = 4096
 DSIR_SCALE = 1_000_000
 DSIR_SEED = 7
@@ -50,26 +52,10 @@ def hashed_ngram_bucket(ngram: Column, n_buckets: int = DSIR_N_BUCKETS, seed: in
     return (F.conv(key, 16, 10).cast("bigint") % n_buckets).cast("int")
 
 
-def ngram_strings(text_col: str = "text", tokens: Column | None = None) -> Column:
-    """Unigrams + space-joined bigrams of the whitespace tokenization —
-    the DSIR feature set. Row-local.
-
-    Perf: pass ``tokens`` as a PRE-BOUND column (stage
-    ``F.split(col, " ")`` through a ``.select(...).alias("_toks")`` first,
-    then pass ``F.col("_toks")``) — same contract as
-    ``dedup.shingles_column``. An inline split expression is re-inlined by
-    every ``element_at`` inside the transform lambda (CollapseProject only
-    keeps attribute/literal aliases out of lambdas), turning the bigram
-    build quadratic in document length."""
-    toks = F.split(F.col(text_col), " ") if tokens is None else tokens
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, bigrams)
+def ngram_strings() -> Column:
+    """Unigrams + space-joined bigrams of the staged ``_toks``
+    (``dedup.stage_tokens``) — the DSIR feature set. Row-local."""
+    return F.concat(F.col("_toks"), token_ngrams(2))
 
 
 def dsir_importance_table(
@@ -104,18 +90,14 @@ def dsir_importance_table(
     Output: id, n_ngrams, score_micro_sum, importance_micro.
     Mirrored by ``oracles.dsir_importance_sql``.
     """
-    # stage the token array through a bound column BEFORE the bigram
-    # transform (CLAUDE.md lambda rule — the r5 verdict measured the
-    # inline form 10-24x slower: the split re-evaluates per element)
-    staged = df.select(
+    staged = stage_tokens(
+        df,
         F.col(id_col),
         F.when(target_pred, F.lit(1)).otherwise(F.lit(0)).alias("_tgt"),
-        F.split(F.col(text_col), " ").alias("_toks"),
+        text_col=text_col,
     )
     occ = staged.select(
-        F.col(id_col),
-        F.col("_tgt"),
-        F.explode(ngram_strings(text_col, tokens=F.col("_toks"))).alias("_ngram"),
+        F.col(id_col), F.col("_tgt"), F.explode(ngram_strings()).alias("_ngram")
     ).withColumn("bucket", hashed_ngram_bucket(F.col("_ngram"), n_buckets, seed))
     # occ feeds BOTH the bucket-stats aggregate and the weights join —
     # checkpoint the narrow int projection (ngram text dropped) so the

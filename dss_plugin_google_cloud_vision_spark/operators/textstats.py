@@ -18,13 +18,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.langid import LANG_STOPWORDS
+from .dedup import (
+    _drop_oversized_buckets,
+    shingles_column,
+    stage_tokens,
+    token_ngrams,
+    tokens_column,
+)
 
 BPE_ISH_TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def tokens(text_col: str = "text") -> Column:
-    return F.split(F.col(text_col), " ")
-
 
 def regex_token_count(text_col: str = "text") -> Column:
     """BPE-ish token count: alpha runs, digit runs, and single punctuation
@@ -37,7 +39,7 @@ def quality_columns(text_col: str = "text") -> Dict[str, Column]:
     length, token count, mean token length, stopword ratio (en profile),
     non-alnum ratio. Compose downstream however the pipeline wants —
     components stay exact for oracle checks."""
-    toks = tokens(text_col)
+    toks = tokens_column(text_col)
     n_tokens = F.size(toks)
     n_chars = F.length(F.col(text_col))
     chars_no_space = F.length(F.regexp_replace(F.col(text_col), " ", ""))
@@ -64,21 +66,12 @@ def fingerprint_column(text_col: str = "text") -> Column:
     return F.md5(F.col(text_col))
 
 
-def shingle_fingerprint_column(
-    text_col: str = "text", k: int = 5, tokens: Column | None = None
-) -> Column:
+def shingle_fingerprint_column(text_col: str = "text", k: int = 5) -> Column:
     """Content-defined fingerprint robust to document order: the minimum
-    md5 over k-gram token shingles (a 1-hash MinHash) — the document
-    fingerprint for near-dup blocking.
-
-    Perf: pass ``tokens`` pre-bound (see ``dedup.shingles_column``) — an
-    inline split is re-evaluated per shingle element (measured ~15x on the
-    sf0.1 fingerprints query)."""
-    from .dedup import shingles_column
-
-    return F.array_min(
-        F.transform(shingles_column(text_col, k, tokens=tokens), lambda s: F.md5(s))
-    )
+    md5 over k-gram token shingles of the staged ``_toks``
+    (``dedup.stage_tokens``; a 1-hash MinHash) — the document fingerprint
+    for near-dup blocking."""
+    return F.array_min(F.transform(shingles_column(text_col, k), lambda s: F.md5(s)))
 
 
 ROLLING_HASH_MOD = (1 << 31) - 1  # Mersenne prime; 256 * mod fits in int64
@@ -157,13 +150,8 @@ def _staged_winnow_encoded(
     one-expression form measured 18.6x slower at sf0.1). Single
     implementation shared by the per-doc table and the pair generator so
     a staging fix can never diverge."""
-    from .dedup import shingles_column
-
-    bound = df.select(
-        F.col(id_col), F.col(text_col), F.split(F.col(text_col), " ").alias("_toks")
-    )
-    staged = bound.select(
-        F.col(id_col), shingles_column(text_col, k, tokens=F.col("_toks")).alias("_kg")
+    staged = stage_tokens(df, id_col, text_col, text_col=text_col).select(
+        F.col(id_col), shingles_column(text_col, k).alias("_kg")
     )
     return staged.select(F.col(id_col), _winnow_encode(F.col("_kg")).alias("_enc"))
 
@@ -242,8 +230,6 @@ def winnow_near_dup_pairs(
     ones and report ``dedup.oversized_band_buckets`` alongside.
 
     Output: (doc_a, doc_b, n_shared_fps), doc_a < doc_b."""
-    from .dedup import _drop_oversized_buckets
-
     enc = _staged_winnow_encoded(df, id_col, text_col, k)
     fps = (
         enc.select(F.col(id_col), F.explode(_winnow_select(F.col("_enc"), w)).alias("_sel"))
@@ -321,7 +307,7 @@ def c4_gates_table(
 
 def langid_hit_columns(text_col: str = "text") -> Dict[str, Column]:
     """Per-profile stopword hit counts (one filter+size per profile)."""
-    toks = tokens(text_col)
+    toks = tokens_column(text_col)
 
     def make_predicate(stopword_list):
         return lambda w: F.lower(w).isin(stopword_list)
@@ -397,17 +383,8 @@ def repetition_table(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     Shape: bigram explode → (doc, bigram) count → per-doc max/sum — two
     aggregations that stay keyed on the doc id (one shuffle each, map-side
     combinable); integer output, exact oracle."""
-    toks = F.split(F.col(text_col), " ")
-    bound = df.select(F.col(id_col), toks.alias("_toks"))
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size(F.col("_toks")) - 1),
-        lambda i: F.concat_ws(" ", F.element_at(F.col("_toks"), i), F.element_at(F.col("_toks"), i + 1)),
-    )
-    exploded = bound.select(
-        F.col(id_col),
-        F.explode(F.when(F.size(F.col("_toks")) >= 2, bigrams).otherwise(F.array())).alias(
-            "bigram"
-        ),
+    exploded = stage_tokens(df, id_col, text_col=text_col).select(
+        F.col(id_col), F.explode(token_ngrams(2)).alias("bigram")
     )
     per_bigram = exploded.groupBy(id_col, "bigram").agg(F.count("*").alias("n"))
     stats = per_bigram.groupBy(id_col).agg(
@@ -476,7 +453,7 @@ def gopher_columns(
     """The Gopher gate as raw column expressions (all row-local), so the
     gate composes into ANY projection — the batch table
     (``gopher_quality_table``) or any caller's own filter."""
-    toks = tokens(text_col)
+    toks = tokens_column(text_col)
     n_words = F.size(toks)
     char_sum = F.aggregate(toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t))
     mean_wl_milli = F.when(n_words > 0, F.floor(char_sum * 1000 / n_words)).otherwise(
@@ -576,7 +553,7 @@ def token_rarity_table(
     Mirrored by ``oracles.token_rarity_sql``.
     """
     occurrences = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("tok")
+        F.col(id_col), F.explode(tokens_column(text_col)).alias("tok")
     )
     vocabulary = occurrences.groupBy("tok").agg(F.count("*").alias("freq"))
     return (
@@ -618,7 +595,7 @@ def gopher_quality_multilingual_table(
     Row-local JVM expressions; mirrored by
     ``oracles.gopher_multilingual_sql``.
     """
-    toks = tokens(text_col)
+    toks = tokens_column(text_col)
     n_words = F.size(toks)
     char_sum = F.aggregate(toks, F.lit(0).cast("bigint"), lambda acc, t: acc + F.length(t))
     mean_wl_milli = F.when(n_words > 0, F.floor(char_sum * 1000 / n_words)).otherwise(
@@ -680,7 +657,7 @@ def bigram_predictability_table(
     split at runtime; the explicit broadcast-head rewrite measured as a
     net constant cost at bench scale.
     """
-    base = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
+    base = stage_tokens(df, id_col, text_col=text_col)
     toks = F.col("_toks")
     pairs = F.transform(
         F.sequence(F.lit(1), F.size(toks) - 1),
@@ -742,7 +719,7 @@ def trigram_predictability_table(
     Mirrored by ``oracles.trigram_predictability_sql``.
     """
     w3, w2, w1 = TRIGRAM_INTERP_WEIGHTS
-    base = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
+    base = stage_tokens(df, id_col, text_col=text_col)
     toks = F.col("_toks")
     triples = F.transform(
         F.sequence(F.lit(1), F.size(toks) - 2),
@@ -882,16 +859,9 @@ def duplicate_ngram_stats(
     (floor((n_grams - n_distinct) * 1000 / n_grams); 0 when no grams).
     Mirrored by ``oracles.duplicate_ngram_sql``.
     """
-    base = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("_toks"))
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    with_grams = base.select(F.col(id_col), grams.alias("_grams"))
+    with_grams = stage_tokens(df, id_col, text_col=text_col).select(
+        F.col(id_col), token_ngrams(n).alias("_grams")
+    )
     total = F.size(F.col("_grams"))
     distinct = F.size(F.array_distinct(F.col("_grams")))
     return with_grams.select(

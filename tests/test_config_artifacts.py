@@ -32,9 +32,6 @@ def test_validate_params_defaults_pass():
     [
         {"batch_size": 0},
         {"batch_size": 17},
-        {"parallel_workers": 0},
-        {"parallel_workers": 101},
-        {"quota_period": 0},
         {"rate_limit": 0},
         {"minimum_score": -0.1},
         {"minimum_score": 1.1},
@@ -53,7 +50,7 @@ def test_validate_params_rejects_out_of_range(kwargs):
 
 def test_validate_params_boundaries_and_overrides():
     # boundary values are legal (reference ranges are inclusive)
-    params = validate_params(batch_size=16, parallel_workers=100, minimum_score=1.0, aspect_ratio=0.1)
+    params = validate_params(batch_size=16, minimum_score=1.0, aspect_ratio=0.1)
     assert params.batch_size == 16
     # document path forces batch size 1 (plugin_params_loader.py:162-164)
     assert validate_params(batch_size=16, document_path=True).batch_size == 1

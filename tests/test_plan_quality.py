@@ -383,3 +383,83 @@ def test_latest_per_url_single_exchange_no_window(spark, sf_dir):
     assert "Window" not in plan, plan
     # partial (map-side) aggregation present before the shuffle
     assert "partial_" in plan or "HashAggregate" in plan.split("Exchange")[0], plan
+
+
+def _lambda_bodies(plan: str) -> list:
+    """Every ``lambdafunction(...)`` span of a plan string, matched by
+    balanced parentheses (nested lambdas stay inside their parent's)."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        depth, i = 0, start + len("lambdafunction")
+        while True:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            if depth == 0:
+                break
+            i += 1
+        bodies.append(plan[start : i + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def test_ngram_builders_stage_tokens(spark, sf_dir, monkeypatch):
+    """No n-gram builder may reference an inline ``split(`` inside a
+    higher-order lambda: the token array must come from the bound
+    ``_toks`` column (``dedup.stage_tokens``), or every ``element_at``
+    re-evaluates the split (the CLAUDE.md lambda rule)."""
+    from dss_plugin_google_cloud_vision_spark.operators import dedup
+    from dss_plugin_google_cloud_vision_spark.operators.classifier import (
+        train_class_affinity_weights,
+    )
+    from dss_plugin_google_cloud_vision_spark.operators.corpus_diff import corpus_minhash
+    from dss_plugin_google_cloud_vision_spark.operators.selection import (
+        dsir_importance_table,
+    )
+    from dss_plugin_google_cloud_vision_spark.operators.textstats import (
+        bigram_predictability_table,
+        duplicate_ngram_stats,
+        repetition_table,
+        shingle_fingerprint_column,
+        trigram_predictability_table,
+        winnow_fingerprint_table,
+        winnow_near_dup_pairs,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # a checkpoint would hide the staged lineage behind a LogicalRDD
+    monkeypatch.setattr(type(docs), "localCheckpoint", lambda self, *args, **kwargs: self)
+    pairs = docs.select(F.col("doc_id").alias("doc_a"), (F.col("doc_id") + 1).alias("doc_b"))
+    builders = {
+        "minhash_signature": dedup.minhash_signature(docs),
+        "jaccard_verified_pairs": dedup.jaccard_verified_pairs(docs, pairs),
+        "ngram_contamination": dedup.ngram_contamination(docs, docs.limit(5)),
+        "incremental_near_dup_filter": dedup.incremental_near_dup_filter(docs, docs),
+        "corpus_minhash": corpus_minhash(docs),
+        "winnow_fingerprint_table": winnow_fingerprint_table(docs),
+        "winnow_near_dup_pairs": winnow_near_dup_pairs(docs),
+        "dsir_importance_table": dsir_importance_table(docs, F.col("lang") == "en"),
+        "train_class_affinity_weights": train_class_affinity_weights(docs),
+        "repetition_table": repetition_table(docs),
+        "duplicate_ngram_stats": duplicate_ngram_stats(docs),
+        "bigram_predictability_table": bigram_predictability_table(docs),
+        "trigram_predictability_table": trigram_predictability_table(docs),
+        "shingle_fingerprint_column": dedup.stage_tokens(docs, "doc_id", "text").select(
+            shingle_fingerprint_column()
+        ),
+    }
+    toks = dedup.tokens_column("text")
+    inline = docs.select(
+        F.transform(F.sequence(F.lit(1), F.size(toks)), lambda i: F.element_at(toks, i))
+    )
+    previous = spark.conf.get("spark.sql.debug.maxToStringFields")
+    spark.conf.set("spark.sql.debug.maxToStringFields", "1000")
+    try:
+        control = _lambda_bodies(inline._jdf.queryExecution().optimizedPlan().toString())
+        assert control and any("split(" in b for b in control), control
+        for name, df in builders.items():
+            bodies = _lambda_bodies(df._jdf.queryExecution().optimizedPlan().toString())
+            assert bodies, name
+            inlined = [b for b in bodies if "split(" in b]
+            assert not inlined, (name, inlined)
+    finally:
+        spark.conf.set("spark.sql.debug.maxToStringFields", previous)

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from dss_plugin_google_cloud_vision_spark.operators.dedup import stage_tokens
 from dss_plugin_google_cloud_vision_spark.operators.selection import (
     budget_head,
     dsir_importance_table,
@@ -31,8 +32,8 @@ def _docs(spark, rows):
 
 def test_ngram_strings_unigrams_and_bigrams(spark):
     out = (
-        spark.createDataFrame([Row(text="a b c")])
-        .select(ngram_strings("text").alias("ng"))
+        stage_tokens(spark.createDataFrame([Row(text="a b c")]))
+        .select(ngram_strings().alias("ng"))
         .head()["ng"]
     )
     assert out == ["a", "b", "c", "a b", "b c"]
@@ -40,8 +41,8 @@ def test_ngram_strings_unigrams_and_bigrams(spark):
 
 def test_ngram_strings_single_token(spark):
     out = (
-        spark.createDataFrame([Row(text="solo")])
-        .select(ngram_strings("text").alias("ng"))
+        stage_tokens(spark.createDataFrame([Row(text="solo")]))
+        .select(ngram_strings().alias("ng"))
         .head()["ng"]
     )
     assert out == ["solo"]
