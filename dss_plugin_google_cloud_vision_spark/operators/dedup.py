@@ -168,6 +168,24 @@ def _jaccard_at_least(inter: Column, union: Column, threshold_milli: int) -> Col
     return inter * 1000 >= threshold_milli * union
 
 
+def symmetric_pairs(
+    pairs: DataFrame, left_col: str, right_col: str, out_left: str, out_right: str
+) -> DataFrame:
+    """Both directions of every pair: (left, right) and (right, left) as
+    (out_left, out_right) — the same bag of rows as a self-``unionAll``
+    with swapped columns, but ``pairs`` is referenced ONCE. A self-union
+    lists the whole upstream plan (for a near-dup pair list: the LSH and
+    Jaccard chain) in both branches, and exchange reuse spares only its
+    shuffles; the explode of a two-struct array keeps one copy."""
+    both = F.explode(
+        F.array(
+            F.struct(F.col(left_col).alias(out_left), F.col(right_col).alias(out_right)),
+            F.struct(F.col(right_col).alias(out_left), F.col(left_col).alias(out_right)),
+        )
+    ).alias("_pair")
+    return pairs.select(both).select(f"_pair.{out_left}", f"_pair.{out_right}")
+
+
 def exact_dedup_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact duplicate groups: keeper = min id per identical text.
     Output: doc_id (keeper), n_copies — only groups with >1 copy."""
@@ -503,13 +521,13 @@ def near_dup_clusters(
     hit before the fixpoint the labels would be silently WRONG, so the
     function raises instead.
 
+    The undirected edge list is built by ``symmetric_pairs``, so the
+    (usually LSH-derived) ``pairs`` plan runs once, not once per edge
+    direction.
+
     Output: doc_id, cluster_id — every node that appears in ``pairs``.
     """
-    edges = (
-        pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
-        .unionAll(pairs.select(F.col(right_col).alias("src"), F.col(left_col).alias("dst")))
-        .distinct()
-    )
+    edges = symmetric_pairs(pairs, left_col, right_col, "src", "dst").distinct()
     # materialize the edge list ONCE: the loop re-reads it every iteration
     # and ``pairs`` is usually the tail of an expensive LSH pipeline
     edges = edges.localCheckpoint(eager=True)
@@ -842,9 +860,15 @@ def incremental_near_dup_filter(
     - the increment is signed/shingled ONCE: the same band table feeds
       the cross join and the within-increment self-join, the same shingle
       sets feed both verifications (identical subtrees also let Spark
-      reuse shuffle exchanges).
+      reuse shuffle exchanges);
+    - both verifications end in ONE distinct duplicate-id set, removed
+      from the increment by ONE left join plus a null filter, so the
+      verification chain appears once in the plan even when the
+      increment is a ``unionAll`` (an anti-join would be copied into
+      every union branch).
 
-    Output: the surviving increment rows (all input columns).
+    Output: the surviving increment rows (all input columns). A row with a
+    null id is kept; rows sharing an id are kept or dropped together.
     """
     inc_bands = lsh_band_keys(
         minhash_signature(increment, id_col, text_col, n_hashes, shingle_k),
@@ -886,7 +910,7 @@ def incremental_near_dup_filter(
         )
         .filter(_jaccard_at_least(F.col("inter_size"), F.col("union_size"), threshold_milli))
     )
-    cross_dup = verified.select(F.col("doc_i").alias(id_col)).distinct()
+    cross_dup = verified.select(F.col("doc_i").alias(id_col))
     guarded_inc = _drop_oversized_buckets(inc_bands, ["band", "band_key"], max_bucket_size)
     self_cand = (
         guarded_inc.select(F.col(id_col).alias("doc_a"), "band", "band_key")
@@ -909,10 +933,18 @@ def incremental_near_dup_filter(
             )
         )
         .select(F.col("doc_b").alias(id_col))
-        .distinct()
     )
+    dup_ids = cross_dup.unionAll(self_dup).distinct().withColumn("_dup_hit", F.lit(1))
+    # not a left_anti join: Spark's PushDownLeftSemiAntiJoin pushes a
+    # semi/anti join into every branch of a Union-shaped left side, which
+    # copies the whole verification chain above once per branch. The rule
+    # leaves outer joins alone, and a left join filtered on the right side
+    # being null is not rewritten back into an anti-join. A null id
+    # matches nothing and survives, as under the anti-join.
     return (
-        increment.join(cross_dup, id_col, "left_anti").join(self_dup, id_col, "left_anti")
+        increment.join(dup_ids, id_col, "left")
+        .filter(F.col("_dup_hit").isNull())
+        .drop("_dup_hit")
     )
 
 

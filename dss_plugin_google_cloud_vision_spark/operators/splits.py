@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import symmetric_pairs
 from .sampling import sample_key_column
 
 DEFAULT_SPLITS_MILLI = (("train", 980), ("valid", 10), ("test", 10))
@@ -89,16 +90,14 @@ def split_leakage_report(
 
     Scale shape: both endpoints' splits are computed ROW-LOCALLY on the
     pair list (pure-function assignment — no corpus join, no split table
-    to shuffle); pairs are symmetrized and aggregated at id grain; the
-    single corpus-sized operation is the final left join at id grain so
-    zero-link docs report zeros. Mirrored by ``oracles.split_leakage_sql``.
+    to shuffle); pairs are symmetrized by ``dedup.symmetric_pairs`` (one
+    reference to ``pairs``, so its upstream LSH chain runs once, not once
+    per direction) and aggregated at id grain; the single corpus-sized
+    operation is the final left join at id grain so zero-link docs report
+    zeros. Mirrored by ``oracles.split_leakage_sql``.
     """
     eval_set = list(eval_splits)
-    sym = pairs.select(
-        F.col("doc_a").alias("doc_id"), F.col("doc_b").alias("partner")
-    ).unionAll(
-        pairs.select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("partner"))
-    )
+    sym = symmetric_pairs(pairs, "doc_a", "doc_b", "doc_id", "partner")
     my_split = split_column(splits_milli, "doc_id", seed)
     partner_split = split_column(splits_milli, "partner", seed)
     links = (

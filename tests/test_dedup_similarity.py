@@ -447,6 +447,56 @@ def test_incremental_near_dup_filter(spark):
     assert kept2 == kept
 
 
+def test_incremental_near_dup_filter_union_increment(spark):
+    """A union-shaped increment filters exactly like the same rows
+    materialized first: a null id survives (even when its text near-dups
+    the corpus, as under an anti-join), and rows sharing an id are kept or
+    dropped together."""
+    from collections import Counter
+
+    from dss_plugin_google_cloud_vision_spark.operators.dedup import (
+        incremental_near_dup_filter,
+    )
+
+    schema = "doc_id int, text string"
+    corpus = spark.createDataFrame(
+        [
+            (10, "the quick brown fox jumps over the lazy dog near the river bank"),
+            (20, "a completely different document about gardens markets and stone windows"),
+        ],
+        schema,
+    )
+    fresh = [
+        (102, "music paper animals and rivers flow through the small market town"),
+        (104, "totally unrelated text with unique vocabulary zebra quartz granite"),
+        # a repeated id whose rows are both fresh: both kept
+        (105, "copper lanterns glow above the harbor while fishermen mend nets"),
+        (105, "seven violet kites drift over the meadow beside the old mill"),
+        # a repeated id whose other row near-dups corpus doc 20: both dropped
+        (106, "bright glass"),
+        # a null id near-dupping corpus doc 10: kept
+        (None, "the quick brown fox jumps over the lazy dog near the river bank again"),
+    ]
+    planted_corpus_dups = [
+        (101, "the quick brown fox jumps over the lazy dog near the river bank today"),
+        (106, "a completely different document about gardens markets and stone windows too"),
+    ]
+    # an exact copy of increment doc 102 under a higher id: dropped
+    planted_self_dups = [(103, fresh[0][1])]
+    increment = (
+        spark.createDataFrame(fresh, schema)
+        .unionAll(spark.createDataFrame(planted_corpus_dups, schema))
+        .unionAll(spark.createDataFrame(planted_self_dups, schema))
+    )
+
+    def rows(df):
+        return Counter(tuple(r) for r in incremental_near_dup_filter(df, corpus).collect())
+
+    expected = Counter(r for r in fresh if r[0] != 106)
+    assert rows(increment) == expected
+    assert rows(increment.localCheckpoint(eager=True)) == expected
+
+
 def test_url_canonicalization_rules(spark):
     from dss_plugin_google_cloud_vision_spark.operators.urls import canonicalize_urls
 

@@ -463,3 +463,33 @@ def test_ngram_builders_stage_tokens(spark, sf_dir, monkeypatch):
             assert not inlined, (name, inlined)
     finally:
         spark.conf.set("spark.sql.debug.maxToStringFields", previous)
+
+
+def test_dedup_subtrees_appear_once(spark, sf_dir):
+    """Each dedup plan lists its MinHash/LSH subtree once. A self-union of
+    a pair list, or a semi/anti join over a Union-shaped left side
+    (Spark's PushDownLeftSemiAntiJoin copies the right side into every
+    branch), would repeat the signature aggregates per copy."""
+    import __spark_entry__ as entry
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan()
+
+    def signature_aggregates(plan) -> int:
+        return plan.toString().count("min(md5(cast(concat(0#")
+
+    queries = entry.queries()
+    leakage = optimized(queries["split_leakage"](spark, sf_dir))
+    assert signature_aggregates(leakage) <= 4, leakage.toString()
+    incremental = optimized(queries["incremental_near_dup"](spark, sf_dir))
+    assert signature_aggregates(incremental) <= 10, incremental.toString()
+    assert incremental.nodeName() != "Union", incremental.toString()
+
+    # negative control: the checker sees an anti-join pushed into a union
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    increment = docs.filter(F.col("doc_id") % 2 == 0).unionAll(
+        docs.filter(F.col("doc_id") % 2 == 1)
+    )
+    ids = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
+    pushed = optimized(increment.join(ids, "doc_id", "left_anti"))
+    assert pushed.nodeName() == "Union", pushed.toString()

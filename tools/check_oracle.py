@@ -76,6 +76,9 @@ def table_signature(columns, rows):
 
 
 def main():
+    # one line per checked entry, written as it is decided: a piped run
+    # (`| tee`) that ends abnormally still shows every entry it checked
+    sys.stdout.reconfigure(line_buffering=True)
     parser = argparse.ArgumentParser()
     parser.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR2", "/root/testdata/sf0.01"))
     parser.add_argument("--only", default="")
