@@ -5,10 +5,11 @@
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE COMPACT JSON line::
 
     {"metric": "headline_suite_seconds", "value": N, "unit": "sec",
-     "n_queries": K, "sf": ..., "extract_docs_per_sec": ...}
+     "n_queries": K, "sf": ..., "extract_docs_per_sec": ..., "queries": {...}}
 
-(per-query timings go to ``BENCH/last_run_queries.json`` — the inline map
-outgrew the driver's stdout tail capture in round 3).
+(``queries`` holds the 3 extraction rows and the first 50 ``queries()``
+entries; the full per-query map goes to ``BENCH/last_run_queries.json`` —
+it outgrew the 2,000-character stdout tail that is captured, in round 3).
 
 Also measures raw extraction throughput (documents/sec) over a generated
 pages table (``$SPARK_GRAFT_BENCH_DOCS`` docs, default 20000) — the
@@ -51,6 +52,8 @@ def main():
         extra_conf={
             "spark.sql.files.maxPartitionBytes": "2m",
             "spark.sql.files.openCostInBytes": "512k",
+            # progress bars would interleave with the one stdout line
+            "spark.ui.showConsoleProgress": "false",
         },
     )
 
@@ -137,9 +140,11 @@ def main():
         total += elapsed
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    # stdout carries ONE COMPACT headline line: the per-query map outgrew
-    # the driver's tail capture in round 3 (BENCH_r03 recorded parsed:null),
-    # so the full map goes to BENCH/last_run_queries.json instead
+    # stdout carries ONE COMPACT headline line: the full per-query map
+    # outgrew the 2,000-character tail capture in round 3 (BENCH_r03
+    # recorded parsed:null), so it goes to BENCH/last_run_queries.json;
+    # the line keeps the 3 extraction rows and the first 50 queries()
+    # entries, the correctness-gated window (1,701 characters at sf0.01)
     result = {
         "metric": "headline_suite_seconds",
         "value": round(total, 3),
@@ -151,6 +156,7 @@ def main():
         "zipf_skew_docs_per_sec": round(BENCH_DOCS / zipf_elapsed, 1),
         "bench_docs": BENCH_DOCS,
         "cpus": CPUS,
+        "queries": dict(list(timings.items())[: 3 + 50]),
     }
     per_query_path = os.path.join(REPO_ROOT, "BENCH", "last_run_queries.json")
     with open(per_query_path, "w") as handle:

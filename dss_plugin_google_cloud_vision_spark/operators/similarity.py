@@ -288,33 +288,14 @@ def lsh_bucketed_topk(
     return _ranked_topk(rescored, k, id_col)
 
 
-def hyperplane_band_keys(
-    vec_col: Column, dim: int, n_planes: int = 32, n_bands: int = 4
-) -> List[Column]:
-    """Per-band LSH bucket keys for pairwise blocking: band ``b``'s key
-    packs the sign bits of its ``n_planes // n_bands`` hyperplanes into a
-    small int (bits packed per band — no 32-bit overflow however many
-    planes). Two vectors are near-dup candidates iff they share a key in
-    at least one band. Exactly-parallel vectors always share every key."""
-    planes_per_band = n_planes // n_bands
-    keys: List[Column] = []
-    for b in range(n_bands):
-        terms = []
-        for r in range(planes_per_band):
-            plane_index = b * planes_per_band + r
-            plane = F.array(*[F.lit(v) for v in _hyperplane(dim, plane_index)])
-            terms.append(
-                F.when(dot_product(vec_col, plane) > 0, F.lit(2**r)).otherwise(F.lit(0))
-            )
-        keys.append(sum(terms[1:], terms[0]).cast("int"))
-    return keys
-
-
 def hyperplane_band_keys_udf(dim: int, n_planes: int = 32, n_bands: int = 4):
-    """Vectorized form of ``hyperplane_band_keys``: ONE Arrow batch
-    kernel computing every band key per vector (returns ``array<int>``
-    of length ``n_bands``), replacing ``n_planes`` interpreted
-    ``F.aggregate`` folds AND the ``n_planes × dim`` literal expression
+    """Per-band LSH bucket keys for pairwise blocking, as ONE Arrow batch
+    kernel (returns ``array<int>`` of length ``n_bands``): band ``b``'s
+    key packs the sign bits of its ``n_planes // n_bands`` hyperplanes
+    into a small int. Two vectors are near-dup candidates iff they share
+    a key in at least one band; exactly-parallel vectors always share
+    every key. A kernel instead of ``n_planes`` interpreted
+    ``F.aggregate`` folds over an ``n_planes × dim`` literal expression
     tree (r6: building those ``F.lit`` arrays cost ~2 s of py4j round
     trips per plan, and the literals bloat Catalyst optimization).
 
@@ -323,9 +304,9 @@ def hyperplane_band_keys_udf(dim: int, n_planes: int = 32, n_bands: int = 4):
     plane[d]`` — one numpy multiply-add per dimension, never matmul or
     ``ndarray.sum()``), and the planes are the identical
     ``_hyperplane`` doubles, so the sign bits — and therefore every
-    band key — match the expression form and the DuckDB oracle
-    bit-for-bit. A null vector yields a SQL NULL (the expression form's
-    null propagation)."""
+    band key — match the DuckDB oracle (``oracles._hyperplane_band_key_sql``)
+    bit-for-bit. A null vector yields a SQL NULL, as SQL null
+    propagation would."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf

@@ -247,7 +247,7 @@ EMB_CORPUS_CTE = (
 
 
 def _hyperplane_band_key_sql(vec: str, band: int, dim: int, n_planes: int, n_bands: int) -> str:
-    """Mirror of operators.similarity.hyperplane_band_keys for one band."""
+    """Mirror of operators.similarity.hyperplane_band_keys_udf for one band."""
     planes_per_band = n_planes // n_bands
     terms = []
     for r in range(planes_per_band):

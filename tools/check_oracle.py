@@ -89,6 +89,14 @@ def main():
     import __spark_entry__ as entrymod
     from dss_plugin_google_cloud_vision_spark.session import get_spark
 
+    queries = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    only = {name for name in args.only.split(",") if name}
+    # a typo must not check zero entries and report a pass
+    unknown = sorted(only - set(queries))
+    if unknown:
+        sys.exit(f"--only names no queries() entry: {', '.join(unknown)}")
+
     spark = get_spark(app_name="check-oracle", cores=8)
     con = duckdb.connect()
     for table in TABLES:
@@ -96,9 +104,6 @@ def main():
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {table} AS SELECT * FROM '{path}'")
 
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    only = {name for name in args.only.split(",") if name}
     failures = []
     for name, fn in queries.items():
         if only and name not in only:

@@ -14,14 +14,9 @@ import os
 import shutil
 import sys
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from queries import REPO_ROOT, formatted  # tools/queries.py, beside this script
+
 sys.path.insert(0, REPO_ROOT)
-
-
-def formatted(df) -> str:
-    return df._jdf.queryExecution().explainString(
-        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
 
 
 def splice_sections(text: str, sections) -> str:
